@@ -31,9 +31,19 @@ import graft.ml.{Forecaster, GbtLagModel}
   * ETH=24 (app.py:203-206); model/scaler pairs load from `modelsDir` and
   * missing artifacts are 404s (app.py:211-213).
   *
-  * The driver query runs on Spark (`api` calls collect only top-k /
-  * single-row results); the HTTP layer is a thin shell. `now` is injected
-  * for deterministic tests (SURVEY.md §7.5.4).
+  * The realtime routes and dropdowns answer from [[Api]]'s driver-side
+  * views, which run a Spark read only on the first request after a table
+  * changes; the historical and predict routes run a top-k Spark collect.
+  * The HTTP layer is a thin shell. `now` is injected for deterministic
+  * tests (SURVEY.md §7.5.4).
+  *
+  * [[start]] turns on TCP_NODELAY for the JDK server
+  * (`sun.net.httpserver.nodelay=true`) unless that property is already
+  * set. This is a process-wide policy: the JDK reads the property once,
+  * when its server classes load, so it applies to every JDK HTTP server in
+  * the JVM, and only if no server was created before. Without it, each
+  * keep-alive response (headers and body written separately) waits on
+  * Nagle's algorithm plus the client's delayed ACK.
   */
 final class HttpApi(api: Api, modelsDir: Option[String] = None,
     now: () => Instant = () => Instant.now(),
@@ -51,6 +61,7 @@ final class HttpApi(api: Api, modelsDir: Option[String] = None,
 
   /** Start on `port` (0 = ephemeral); returns the bound port. */
   def start(port: Int = 0): Int = {
+    System.getProperties.putIfAbsent("sun.net.httpserver.nodelay", "true")
     server = HttpServer.create(new InetSocketAddress(port), 0)
     server.createContext("/api/realtime_stats/", exchange { path =>
       val symbol = path.stripPrefix("/api/realtime_stats/").replace('-', '/')
@@ -108,9 +119,10 @@ final class HttpApi(api: Api, modelsDir: Option[String] = None,
       if (path != "/") notFound(path)
       else Right(Pages.realtime(realtimeSymbols()))
     })
-    // fixed pool: each request runs a Spark collect, so concurrency is
-    // bounded by driver scheduling anyway — size to the expected dashboard
-    // fan-out (the JDK server handles HTTP keep-alive itself)
+    // fixed pool sized to the expected dashboard fan-out: view hits are
+    // cheap, and view rebuilds and historical/predict collects are bounded
+    // by driver scheduling anyway (the JDK server handles HTTP keep-alive
+    // itself)
     server.setExecutor(
       java.util.concurrent.Executors.newFixedThreadPool(poolSize))
     server.start()

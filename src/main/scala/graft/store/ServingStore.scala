@@ -1,6 +1,8 @@
 package graft.store
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{FileVisitResult, Files, Path, Paths, SimpleFileVisitor,
+  StandardCopyOption}
+import java.nio.file.attribute.BasicFileAttributes
 import java.util.Comparator
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
@@ -81,10 +83,52 @@ final class ServingStore(val root: String)(implicit val spark: SparkSession) {
     * logs resolve latest-epoch-per-key, plain logs dedup replays, merged
     * snapshots pass through.
     */
-  def tableCurrent(name: String, keyCol: String): DataFrame = {
-    val t = table(name)
-    if (t.columns.contains("_epoch")) tableLatestByEpoch(name, keyCol)
+  def tableCurrent(name: String, keyCol: String): DataFrame =
+    current(table(name), keyCol)
+
+  /** [[tableCurrent]] over an already-resolved (possibly filtered) read of
+    * a table, so the table is listed and its schema resolved once. A filter
+    * must keep or drop all rows of a key alike.
+    */
+  def current(t: DataFrame, keyCol: String): DataFrame =
+    if (t.columns.contains("_epoch")) latestByEpoch(t, keyCol)
     else t.dropDuplicates(keyCol)
+
+  /** A cheap change token for a table: the `_current` pointer plus the
+    * relative path and size of every data file Spark would list. Every
+    * store write lands under fresh file names (a new snapshot, a new part
+    * file, a new partition directory), so equal tokens mean equal contents.
+    * `None` when the table does not exist.
+    */
+  def version(name: String): Option[ServingStore.Version] = {
+    val pointer = currentPointer(tableDir(name))
+    val dir = pointer.fold(tableDir(name))(tableDir(name).resolve)
+    if (!Files.isDirectory(dir)) None
+    else {
+      val files = Vector.newBuilder[(String, Long)]
+      // hidden subtrees are skipped, not walked: in-flight `_temporary`
+      // task output appears and vanishes while a sink commits
+      Files.walkFileTree(dir, new SimpleFileVisitor[Path] {
+        override def preVisitDirectory(d: Path,
+            a: BasicFileAttributes): FileVisitResult =
+          if (d == dir || visible(d)) FileVisitResult.CONTINUE
+          else FileVisitResult.SKIP_SUBTREE
+        override def visitFile(f: Path,
+            a: BasicFileAttributes): FileVisitResult = {
+          if (visible(f)) files += dir.relativize(f).toString -> a.size
+          FileVisitResult.CONTINUE
+        }
+      })
+      Some(ServingStore.Version(pointer, files.result().sorted))
+    }
+  }
+
+  /** The names Spark's file listing keeps: hidden (`.x`) and metadata
+    * (`_x`) names are skipped, except `_`-prefixed partition directories.
+    */
+  private def visible(p: Path): Boolean = {
+    val n = p.getFileName.toString
+    !n.startsWith(".") && (!n.startsWith("_") || n.contains("="))
   }
 
   /** Upsert `incoming` into `name` keyed on `keyCol`. Last write wins per
@@ -246,13 +290,20 @@ final class ServingStore(val root: String)(implicit val spark: SparkSession) {
     appendLog(name, incoming.withColumn("_epoch", lit(epochId)))
 
   /** Latest-epoch-wins read over a versioned log. */
-  def tableLatestByEpoch(name: String, keyCol: String): DataFrame = {
+  def tableLatestByEpoch(name: String, keyCol: String): DataFrame =
+    latestByEpoch(table(name), keyCol)
+
+  private def latestByEpoch(t: DataFrame, keyCol: String): DataFrame =
+    newestPerKey(t, keyCol, "_epoch").drop("_epoch")
+
+  /** One row per `keyCol`: the one with the greatest `orderCol`. */
+  private def newestPerKey(t: DataFrame, keyCol: String,
+      orderCol: String): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(keyCol).orderBy(col("_epoch").desc)
-    table(name)
-      .withColumn("_rn", row_number().over(w))
+      .partitionBy(keyCol).orderBy(col(orderCol).desc)
+    t.withColumn("_rn", row_number().over(w))
       .filter(col("_rn") === 1)
-      .drop("_rn", "_epoch")
+      .drop("_rn")
   }
 
   /** Compact to the newest row per key by an EVENT-TIME column — for
@@ -264,24 +315,14 @@ final class ServingStore(val root: String)(implicit val spark: SparkSession) {
     * value-identical so the arbitrary tiebreak is safe.
     */
   def compactLatestBy(name: String, keyCol: String, orderCol: String,
-      partCol: Option[String] = None): Unit = {
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(keyCol).orderBy(col(orderCol).desc)
-    atomicSwapWrite(name,
-      table(name).withColumn("_rn", row_number().over(w))
-        .filter(col("_rn") === 1).drop("_rn"), partCol)
-  }
+      partCol: Option[String] = None): Unit =
+    atomicSwapWrite(name, newestPerKey(table(name), keyCol, orderCol), partCol)
 
   /** Compact a versioned log to its latest-epoch snapshot (epoch column
     * retained so further appends keep working).
     */
-  def compactVersioned(name: String, keyCol: String): Unit = {
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(keyCol).orderBy(col("_epoch").desc)
-    atomicSwapWrite(name,
-      table(name).withColumn("_rn", row_number().over(w))
-        .filter(col("_rn") === 1).drop("_rn"))
-  }
+  def compactVersioned(name: String, keyCol: String): Unit =
+    atomicSwapWrite(name, newestPerKey(table(name), keyCol, "_epoch"))
 
   /** Full overwrite (for `es.write.operation=index` complete-mode sinks on
     * tiny tables, e.g. latest-candle-per-symbol — complete mode re-emits
@@ -337,4 +378,10 @@ final class ServingStore(val root: String)(implicit val spark: SparkSession) {
       try s.sorted(Comparator.reverseOrder[Path]()).forEach(f => Files.delete(f))
       finally s.close()
     }
+}
+
+object ServingStore {
+
+  /** [[ServingStore.version]]'s token: equal tokens, equal table contents. */
+  final case class Version(pointer: Option[String], files: Vector[(String, Long)])
 }
