@@ -1,4 +1,5 @@
 package graft
+import org.apache.spark.graftbridge.ListenerDrain
 import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: runs every SparkEntry query against
@@ -89,7 +90,8 @@ object Bench {
       .foreach(p => spark.read.parquet(p).limit(10).collect())
     def once(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
         : (Double, Option[String], String) = {
-      metrics.drain() // previous query's straggler events, not this one's
+      // previous query's straggler events, not this one's
+      ListenerDrain.drain(spark.sparkContext)
       metrics.reset()
       val t0 = System.nanoTime()
       val err = try {
@@ -98,7 +100,7 @@ object Bench {
         Some(Option(e.getMessage).getOrElse(e.getClass.getName).take(200))
       }
       val sec = (System.nanoTime() - t0) / 1e9
-      metrics.drain()
+      ListenerDrain.drain(spark.sparkContext)
       (sec, err, metrics.snapshotJson)
     }
     // Between-query hygiene: d4-style iterative queries localCheckpoint

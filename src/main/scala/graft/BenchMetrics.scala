@@ -15,13 +15,12 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
   * GC/spill growth, a real regression as CPU growth.
   *
   * Counters accumulate from [[onTaskEnd]] on the (async) listener bus;
-  * [[drain]] polls until the event counter goes quiet before a snapshot
-  * is read — every task of the measured query has already FINISHED when
-  * the blocking noop save returns, so quiescence only waits out bus
-  * delivery, never the query itself.
+  * the caller drains the bus (`ListenerDrain.drain`) before a snapshot is
+  * read — every task of the measured query has already FINISHED when the
+  * blocking noop save returns, so the drain only waits out bus delivery,
+  * never the query itself.
   */
 final class BenchMetrics extends SparkListener {
-  private val events = new AtomicInteger(0)
   private val tasks = new AtomicInteger(0)
   private val runMs = new AtomicLong(0L)
   private val cpuNs = new AtomicLong(0L)
@@ -44,25 +43,6 @@ final class BenchMetrics extends SparkListener {
       shuffleReadB.addAndGet(m.shuffleReadMetrics.totalBytesRead)
       spillMemB.addAndGet(m.memoryBytesSpilled)
       spillDiskB.addAndGet(m.diskBytesSpilled)
-    }
-    events.incrementAndGet(): Unit
-  }
-
-  /** Wait until the listener bus has gone quiet (no new task-end events
-    * for `quietMs`), bounded by `maxWaitMs`. The public API has no
-    * waitUntilEmpty, so quiescence-polling is the honest substitute;
-    * with the query's action already returned, in-flight events are
-    * delivery latency only (measured well under the default bound).
-    */
-  def drain(quietMs: Long = 50L, maxWaitMs: Long = 2000L): Unit = {
-    val deadline = System.nanoTime() + maxWaitMs * 1000000L
-    var last = events.get()
-    var lastChange = System.nanoTime()
-    while (System.nanoTime() < deadline &&
-        (System.nanoTime() - lastChange) < quietMs * 1000000L) {
-      Thread.sleep(5)
-      val now = events.get()
-      if (now != last) { last = now; lastChange = System.nanoTime() }
     }
   }
 

@@ -90,7 +90,7 @@ object Pipeline {
 
     // 5. endpoint JSON (reference response shapes, app.py:184-189,240)
     val histJson = graft.api.Responses.historicalData("BTC_USDT", "1h",
-      api.historicalData("BTC_USDT", "1h", "1m", now).orderBy("timestamp")
+      api.historicalData("BTC_USDT", "1h", "1m", now)
         .collect().takeRight(2).toSeq)
     println(s"[pipeline] historical_data JSON tail-2: " +
       histJson.take(400))

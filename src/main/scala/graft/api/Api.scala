@@ -36,8 +36,18 @@ import graft.store.ServingStore
   * view; collecting it runs no Spark job. Memory is bounded by what the
   * routes can return: one latest row and one stats window per symbol, the
   * chart rows of the day partitions the chart window touches, and the
-  * distinct dropdown entries. The range scans (`historicalData`,
-  * `lastCloses`) stay on Spark.
+  * distinct dropdown entries.
+  *
+  * The history routes (`historicalData`, `lastCloses`/`predict`,
+  * `latestStoredTimestamp`) read a per-pair view of the history table,
+  * which only the batch job writes. Per version the table is resolved and
+  * its (symbol, timeframe) pairs listed once (the listing is also the
+  * historical dropdown); a pair's rows are read by one filtered Spark read
+  * on its first request and kept sorted by `timestamp` (nulls first), so a
+  * range is a binary search plus a slice. Memory is the rows of the pairs
+  * actually requested, for the current version only: a version change
+  * drops them all, and a pair the table does not hold reads empty without
+  * a Spark read and is not kept.
   *
   * Time-dependent queries take `now` explicitly (injected Clock —
   * SURVEY.md §7.5.4) so golden tests are deterministic.
@@ -84,13 +94,14 @@ final class Api(val store: ServingStore) {
         .map { case (s, rs) => s -> rs.sortBy(r => DateTimeUtils.anyToMicros(r.get(ts))) })
   })
 
-  private val pairs = new View[Option[ServingStore.Version], Listing](_ => {
-    val df = store.table(Schemas.Tables.Historical)
-      .groupBy("symbol", "timeframe").count()
-      .select(concat(col("symbol"), lit("_"), col("timeframe")).as("pair"))
-      .orderBy("pair")
-    Listing(df.schema, df.collect().toVector)
-  })
+  private val history = new View[Option[ServingStore.Version], History](_ =>
+    new History(store.table(Schemas.Tables.Historical)))
+
+  private def historyView: History =
+    history.get(store.version(Schemas.Tables.Historical))
+
+  /** How many pairs the current history view holds. */
+  private[api] def historyPairsKept: Int = historyView.kept
 
   /** `/api/realtime_stats/<sym>` part 1: get-by-id on the latest table
     * (app.py:97 / W8). Key = symbol with '/' (e.g. "BTC/USDT").
@@ -127,7 +138,8 @@ final class Api(val store: ServingStore) {
 
   /** `/api/historical_data/<sym_tf>?range=`: term symbol AND term timeframe
     * AND optional lower time bound, sort asc, size 10000
-    * (app.py:153-189 / Q3). Range map per app.py:161-165.
+    * (app.py:153-189 / Q3). Range map per app.py:161-165; an unknown range
+    * reads like "all".
     */
   def historicalData(symbol: String, timeframe: String, range: String,
       now: Instant, size: Int = 10000): DataFrame = {
@@ -138,12 +150,11 @@ final class Api(val store: ServingStore) {
       case "1y" => Some(365)
       case _ => None // "all"
     }
-    val base = store.table(Schemas.Tables.Historical)
-      .filter(col("symbol") === symbol && col("timeframe") === timeframe)
-    val bounded = days.fold(base) { d =>
-      base.filter(col("timestamp") >= lit(now.minusSeconds(d.toLong * 86400).getEpochSecond))
-    }
-    bounded.orderBy(asc("timestamp")).limit(size)
+    val p = historyView.pair(symbol, timeframe)
+    val from = days.fold(0)(d =>
+      p.lowerBound(now.minusSeconds(d.toLong * 86400).getEpochSecond))
+    val until = if (size >= p.rows.length - from) p.rows.length else from + size
+    local(p.schema, p.rows.slice(from, until).toSeq)
   }
 
   /** Historical endpoint result shaping (app.py:171-188): UTC label +
@@ -162,7 +173,7 @@ final class Api(val store: ServingStore) {
     * `{symbol}_{timeframe}`, cap 1000 (app.py:72 / A5).
     */
   def historicalPairs(limit: Int = 1000): DataFrame =
-    local(pairs.get(store.version(Schemas.Tables.Historical)), limit)
+    local(historyView.pairs, limit)
 
   /** Model input for `/api/predict_xgboost/<sym_tf>`: last `n` closes,
     * newest-first then reversed to chronological on the driver
@@ -171,22 +182,20 @@ final class Api(val store: ServingStore) {
   def lastCloses(symbol: String, timeframe: String, n: Int): Array[Double] =
     newestCandles(symbol, timeframe, n).map(_.getDouble(1)).reverse
 
-  /** The newest `n` (timestamp, close) rows, newest first. */
-  private def newestCandles(symbol: String, timeframe: String, n: Int): Array[Row] =
-    store.table(Schemas.Tables.Historical)
-      .filter(col("symbol") === symbol && col("timeframe") === timeframe)
-      .orderBy(desc("timestamp"))
-      .limit(n)
-      .select("timestamp", "close")
-      .collect()
+  /** The newest `n` (timestamp, close) rows, newest first (nulls last). */
+  private def newestCandles(symbol: String, timeframe: String, n: Int): Array[Row] = {
+    val p = historyView.pair(symbol, timeframe)
+    val (ts, close) = (p.schema.fieldIndex("timestamp"), p.schema.fieldIndex("close"))
+    p.rows.takeRight(n).reverseIterator.map(r => Row(r.get(ts), r.get(close))).toArray
+  }
 
   /** `/api/predict_xgboost/<sym_tf>` (Q4, app.py:195-244): last-w closes →
     * MinMax scale with the TRAINING-time scaler → recursive multi-step
     * forecast → (timestamp, price) series. The model+scaler arrive as the
     * persisted pair ([[graft.ml.Forecaster.Bundle]], app.py:211-218) —
     * refitting a scaler on the serve tail would skew features vs training.
-    * Window size per symbol mirrors app.py:203-206. One history query
-    * yields both the closes and the last stored timestamp.
+    * Window size per symbol mirrors app.py:203-206. One read of the pair's
+    * view yields both the closes and the last stored timestamp.
     */
   def predict(symbol: String, timeframe: String,
       bundle: graft.ml.Forecaster.Bundle, stepMs: Long,
@@ -205,13 +214,9 @@ final class Api(val store: ServingStore) {
   /** Latest stored timestamp for a (symbol, timeframe) — drives incremental
     * crawling (hourly_updater.py:70-97 / A6).
     */
-  def latestStoredTimestamp(symbol: String, timeframe: String): Option[Long] = {
-    val r = store.table(Schemas.Tables.Historical)
-      .filter(col("symbol") === symbol && col("timeframe") === timeframe)
-      .agg(max("timestamp").as("max_ts"))
-      .collect()(0)
-    if (r.isNullAt(0)) None else Some(r.getLong(0))
-  }
+  def latestStoredTimestamp(symbol: String, timeframe: String): Option[Long] =
+    newestCandles(symbol, timeframe, 1).headOption.filterNot(_.isNullAt(0))
+      .map(_.getLong(0))
 }
 
 object Api {
@@ -235,6 +240,59 @@ object Api {
             v
         }
       }
+    }
+  }
+
+  /** One version of the history table: resolved once, with its sorted
+    * `{symbol}_{timeframe}` dropdown and the rows of the pairs requested so
+    * far. Pair builds are serialised, so requests that miss on the same
+    * pair build once; a build that throws is not kept. A pair the table
+    * does not hold reads empty without a Spark read and is not kept.
+    */
+  private final class History(t: DataFrame) {
+    private val listed = t.select("symbol", "timeframe").distinct()
+      .withColumn("pair", concat(col("symbol"), lit("_"), col("timeframe")))
+      .orderBy("pair")
+    private val rows = listed.collect()
+    val pairs = Listing(StructType(Seq(listed.schema("pair"))),
+      rows.toVector.map(r => Row(r.get(2))))
+    private val present = rows.map(r => (r.getString(0), r.getString(1))).toSet
+    private val built = new java.util.concurrent.ConcurrentHashMap[(String, String), Pair]()
+
+    def pair(symbol: String, timeframe: String): Pair = {
+      val key = (symbol, timeframe)
+      if (!present(key)) new Pair(t.schema, Array.empty)
+      else Option(built.get(key)).getOrElse(synchronized {
+        Option(built.get(key)).getOrElse {
+          val p = new Pair(t.schema, t.filter(col("symbol") === symbol &&
+            col("timeframe") === timeframe).collect())
+          built.put(key, p)
+          p
+        }
+      })
+    }
+
+    def kept: Int = built.size
+  }
+
+  /** A pair's rows ascending by `timestamp`, nulls first (Spark's `asc`),
+    * with the non-null timestamps as a binary-searchable index.
+    */
+  private final class Pair(val schema: StructType, unsorted: Array[Row]) {
+    private val at = schema.fieldIndex("timestamp")
+    val rows: Array[Row] = unsorted.sortBy(r =>
+      if (r.isNullAt(at)) None else Some(r.getLong(at)))
+    private val nulls = rows.count(_.isNullAt(at))
+    private val ts: Array[Long] = rows.drop(nulls).map(_.getLong(at))
+
+    /** Index in [[rows]] of the first row with `timestamp >= bound`. */
+    def lowerBound(bound: Long): Int = {
+      var (lo, hi) = (0, ts.length)
+      while (lo < hi) {
+        val mid = (lo + hi) >>> 1
+        if (ts(mid) < bound) lo = mid + 1 else hi = mid
+      }
+      nulls + lo
     }
   }
 

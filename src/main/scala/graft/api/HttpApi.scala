@@ -31,10 +31,10 @@ import graft.ml.{Forecaster, GbtLagModel}
   * ETH=24 (app.py:203-206); model/scaler pairs load from `modelsDir` and
   * missing artifacts are 404s (app.py:211-213).
   *
-  * The realtime routes and dropdowns answer from [[Api]]'s driver-side
-  * views, which run a Spark read only on the first request after a table
-  * changes; the historical and predict routes run a top-k Spark collect.
-  * The HTTP layer is a thin shell. `now` is injected for deterministic
+  * Every route answers from [[Api]]'s driver-side views, which run a Spark
+  * read only on the first request after a table changes (for the
+  * historical and predict routes: the first request of a pair). The HTTP
+  * layer is a thin shell. `now` is injected for deterministic
   * tests (SURVEY.md §7.5.4).
   *
   * [[start]] turns on TCP_NODELAY for the JDK server
@@ -85,7 +85,7 @@ final class HttpApi(api: Api, modelsDir: Option[String] = None,
         case Some((symbol, timeframe)) =>
           val range = query.getOrElse("range", "all")
           val rows = api.historicalData(symbol, timeframe, range, now())
-            .orderBy("timestamp").collect().toSeq
+            .collect().toSeq
           Right(Responses.historicalData(symbol, timeframe, rows))
       }
     })
@@ -120,9 +120,8 @@ final class HttpApi(api: Api, modelsDir: Option[String] = None,
       else Right(Pages.realtime(realtimeSymbols()))
     })
     // fixed pool sized to the expected dashboard fan-out: view hits are
-    // cheap, and view rebuilds and historical/predict collects are bounded
-    // by driver scheduling anyway (the JDK server handles HTTP keep-alive
-    // itself)
+    // cheap, and view rebuilds are bounded by driver scheduling anyway (the
+    // JDK server handles HTTP keep-alive itself)
     server.setExecutor(
       java.util.concurrent.Executors.newFixedThreadPool(poolSize))
     server.start()

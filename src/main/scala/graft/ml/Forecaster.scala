@@ -18,7 +18,8 @@ package graft.ml
   * Driver-side by design: the forecast is a 24-iteration loop over a w-length
   * buffer — milliseconds of work; distributing it would be pure overhead.
   * The heavy part at 100 TB is assembling training data, which stays in
-  * Spark (see Api.lastCloses — a TakeOrderedAndProject, not a sort).
+  * Spark; serving reads its input window from Api's per-pair history view
+  * (Api.lastCloses), which one filtered Spark read fills per table version.
   */
 object Forecaster {
 

@@ -9,24 +9,30 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.graftbridge.ListenerDrain
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.functions.{asc, col, desc, lit}
 
 import graft.SparkSpec
+import graft.batch.OhlcvBatchJob
 import graft.ingest.FixtureGen
+import graft.ml.Forecaster
 import graft.schema.Schemas.Tables
 import graft.store.ServingStore
 import graft.stream.OhlcvStreamJob
 
-/** The driver-side views behind Api's dashboard reads: every store write
-  * is visible on the next read, warm reads start no Spark job, the chart
-  * view covers exactly the day partitions its window touches, and reads
-  * racing a running stream job stay consistent.
+/** The driver-side views behind Api's reads: every store write is visible
+  * on the next read, warm reads start no Spark job, the chart view covers
+  * exactly the day partitions its window touches, reads racing a running
+  * stream job stay consistent, and the per-pair history view answers as
+  * the Spark range scan and top-k it replaced.
   */
 class ApiViewSpec extends SparkSpec {
 
   private val t0 = 1717200000000L // 2024-06-01T00:00:00Z
   private val Min = 60000L
+  private val Hour = 3600000L
+  private val Day = 86400L // seconds
 
   private def newStore(): ServingStore =
     new ServingStore(Files.createTempDirectory("api-view").toString)(spark)
@@ -57,6 +63,43 @@ class ApiViewSpec extends SparkSpec {
     pairs.map { case (s, tf) => (s"${s}_$tf", s, tf) }
       .toDF("doc_id", "symbol", "timeframe")
   }
+
+  /** `hours` 1h candles per symbol from `t0`, loaded by the batch job. */
+  private def historyStore(hours: Int, syms: String*): ServingStore = {
+    val raw = Files.createTempDirectory("api-view-raw").toString
+    syms.foreach(sym => FixtureGen.writeCsv(raw,
+      FixtureGen.historicalFileName(sym, "1h"), FixtureGen.candles(sym, t0, Hour, hours)))
+    val st = newStore()
+    OhlcvBatchJob.run(spark, Seq(raw), st)
+    st
+  }
+
+  private def histTs(df: DataFrame): Seq[Long] =
+    df.collect().map(_.getAs[Long]("timestamp")).toSeq
+
+  private def pairRows(st: ServingStore, sym: String): DataFrame =
+    st.table(Tables.Historical)
+      .filter(col("symbol") === sym && col("timeframe") === "1h")
+
+  /** The Spark range scan the history view replaced: lower bound, asc, limit. */
+  private def sparkRange(st: ServingStore, sym: String, days: Option[Int],
+      now: Instant, size: Int = 10000): Seq[Row] = {
+    val base = pairRows(st, sym)
+    days.fold(base)(d => base.filter(col("timestamp") >= lit(now.getEpochSecond - d * Day)))
+      .orderBy(asc("timestamp")).limit(size).collect().toSeq
+  }
+
+  /** The Spark top-k predict read: newest `n` (timestamp, close), newest first. */
+  private def sparkNewest(st: ServingStore, sym: String, n: Int): Array[Row] =
+    pairRows(st, sym).orderBy(desc("timestamp")).limit(n)
+      .select("timestamp", "close").collect()
+
+  /** A value, or the class of what computing it threw. */
+  private def outcome[T](f: => T): Either[Class[_], T] =
+    try Right(f) catch { case e: Exception => Left(e.getClass) }
+
+  private val persistence =
+    Forecaster.Bundle(Forecaster.PersistenceModel(5), Forecaster.MinMaxScaler(0.0, 200.0))
 
   /** Jobs started while `f` runs, counted by a listener of this spec. */
   private def jobsDuring(f: => Unit): Long = {
@@ -254,5 +297,143 @@ class ApiViewSpec extends SparkSpec {
     assert(api.latestStats("ETH/USDT").collect()
       .map(_.getAs[java.sql.Timestamp]("window_end").getTime).toSeq ==
       Seq(last + 10 * Min))
+  }
+
+  test("an hourly batch's candles are visible to every history read next") {
+    val st = historyStore(48, "BTC_USDT")
+    val api = new Api(st)
+    val now = Instant.ofEpochMilli(t0 + 60 * Hour)
+    val before = (t0 + 47 * Hour) / 1000
+    assert(api.latestStoredTimestamp("BTC_USDT", "1h").contains(before))
+    assert(histTs(api.historicalData("BTC_USDT", "1h", "all", now)).last == before)
+    assert(api.predict("BTC_USDT", "1h", persistence, Hour).head.timestampMs ==
+      before * 1000 + Hour)
+
+    val upd = Files.createTempDirectory("api-view-upd").toString
+    val fresh = FixtureGen.candles("BTC_USDT", t0 + 48 * Hour, Hour, 3)
+    FixtureGen.writeCsv(upd,
+      FixtureGen.updateFileName("BTC_USDT", "1h", t0 + 51 * Hour), fresh)
+    assert(OhlcvBatchJob.runIncremental(spark, Seq(upd), st) == 3L)
+
+    val after = (t0 + 50 * Hour) / 1000
+    assert(api.latestStoredTimestamp("BTC_USDT", "1h").contains(after))
+    assert(histTs(api.historicalData("BTC_USDT", "1h", "all", now)) ==
+      (0 until 51).map(i => (t0 + i * Hour) / 1000))
+    assert(api.lastCloses("BTC_USDT", "1h", 3).toSeq == fresh.map(_.close))
+    val fc = api.predict("BTC_USDT", "1h", persistence, Hour)
+    assert(fc.head.timestampMs == after * 1000 + Hour)
+    assert(math.abs(fc.head.predictedPrice - fresh.last.close) < 1e-9)
+  }
+
+  test("history ranges answer as the Spark range scan, and warm reads start no job") {
+    val hours = 420 * 24 // past the 10 000-row cap
+    val st = historyStore(hours, "BTC_USDT", "ETH_USDT")
+    val api = new Api(st)
+    // a stored candle sits exactly at now - 30 d; rows after `now` exist too
+    val now = Instant.ofEpochMilli(t0 + 9100 * Hour)
+    val ranges = Seq("1m" -> Some(30), "3m" -> Some(90), "6m" -> Some(180),
+      "1y" -> Some(365), "all" -> None)
+    for ((range, days) <- ranges; sym <- Seq("BTC_USDT", "ETH_USDT"))
+      assert(api.historicalData(sym, "1h", range, now).collect().toSeq ==
+        sparkRange(st, sym, days, now), s"$sym range=$range")
+
+    val month = histTs(api.historicalData("BTC_USDT", "1h", "1m", now))
+    assert(month.head == now.getEpochSecond - 30 * Day, "the bound is inclusive")
+    assert(month.length == 30 * 24 + (hours - 9100))
+
+    // `size` keeps the oldest rows; an unknown range reads like "all"
+    assert(histTs(api.historicalData("BTC_USDT", "1h", "all", now, size = 100)) ==
+      (0 until 100).map(i => (t0 + i * Hour) / 1000))
+    assert(histTs(api.historicalData("BTC_USDT", "1h", "1m", now, size = 5)) ==
+      month.take(5))
+    assert(api.historicalData("BTC_USDT", "1h", "5y", now).collect().toSeq ==
+      api.historicalData("BTC_USDT", "1h", "all", now).collect().toSeq)
+    assert(histTs(api.historicalData("BTC_USDT", "1h", "all", now)).length == 10000)
+
+    assert(api.lastCloses("ETH_USDT", "1h", 48).toSeq ==
+      sparkNewest(st, "ETH_USDT", 48).map(_.getDouble(1)).reverse.toSeq)
+    def readAll(): Unit = {
+      ranges.foreach { case (range, _) =>
+        api.historicalData("BTC_USDT", "1h", range, now).collect(): Unit }
+      assert(api.lastCloses("ETH_USDT", "1h", 48).length == 48)
+      assert(api.latestStoredTimestamp("BTC_USDT", "1h")
+        .contains((t0 + (hours - 1) * Hour) / 1000))
+    }
+    readAll()
+    val warm = jobsDuring((1 to 20).foreach(_ => readAll()))
+    assert(warm == 0L, s"20 warm history rounds started $warm Spark job(s)")
+  }
+
+  test("unknown pairs read empty and are not kept") {
+    val st = historyStore(48, "BTC_USDT")
+    val api = new Api(st)
+    val now = Instant.ofEpochMilli(t0 + 48 * Hour)
+    assert(api.lastCloses("BTC_USDT", "1h", 5).length == 5)
+    assert(api.historyPairsKept == 1)
+
+    for ((sym, tf) <- Seq("NOPE" -> "1h", "BTC_USDT" -> "4h")) {
+      val df = api.historicalData(sym, tf, "all", now)
+      assert(df.collect().isEmpty)
+      assert(df.schema == st.table(Tables.Historical).schema)
+      assert(api.lastCloses(sym, tf, 5).isEmpty)
+      assert(api.latestStoredTimestamp(sym, tf).isEmpty)
+      intercept[NoSuchElementException](api.predict(sym, tf, persistence, Hour))
+    }
+    val jobs = jobsDuring((1 to 1000).foreach(i =>
+      assert(api.latestStoredTimestamp(s"NOPE$i", "1h").isEmpty)))
+    assert(jobs == 0L, s"1000 unknown pairs started $jobs Spark job(s)")
+    assert(api.historyPairsKept == 1, "a pair with no rows must not be kept")
+  }
+
+  test("concurrent misses on one pair build it once") {
+    val st = historyStore(48, "BTC_USDT", "ETH_USDT", "SOL_USDT")
+    val api = new Api(st)
+    assert(api.lastCloses("BTC_USDT", "1h", 5).length == 5) // resolves the table
+    val one = jobsDuring(assert(api.lastCloses("SOL_USDT", "1h", 5).length == 5))
+    assert(one > 0L, "a pair's first read must build it")
+    val start = new java.util.concurrent.CountDownLatch(1)
+    val seen = new ConcurrentLinkedQueue[Option[Long]]()
+    val together = jobsDuring {
+      val readers = (1 to 4).map { _ =>
+        val t = new Thread(() => {
+          start.await(); seen.add(api.latestStoredTimestamp("ETH_USDT", "1h")): Unit
+        })
+        t.start(); t
+      }
+      start.countDown()
+      readers.foreach(_.join())
+    }
+    assert(seen.asScala.toSeq == Seq.fill(4)(Some((t0 + 47 * Hour) / 1000)))
+    assert(together == one, s"4 concurrent misses ran $together jobs, one build runs $one")
+  }
+
+  test("null timestamps and closes read as the Spark range scan and top-k did") {
+    import spark.implicits._
+    val st = newStore()
+    val api = new Api(st)
+    // pair A: a null timestamp, a null close; pair B: null timestamps only
+    val rows = Seq[(String, Option[Long], Option[Double])](
+      ("A", None, Some(1.0)), ("A", Some(100L), Some(2.0)),
+      ("A", Some(200L), None), ("A", Some(300L), Some(4.0)),
+      ("B", None, Some(5.0)))
+    st.upsert(Tables.Historical, "doc_id", rows.map { case (sym, ts, close) =>
+      (ts, sym, "1h", close, s"${sym}_1h_hist_${ts.getOrElse("null")}")
+    }.toDF("timestamp", "symbol", "timeframe", "close", "doc_id"))
+    val now = Instant.ofEpochSecond(200 + 30 * Day)
+
+    for (sym <- Seq("A", "B"); days <- Seq(None, Some(30)))
+      assert(api.historicalData(sym, "1h", days.fold("all")(_ => "1m"), now)
+        .collect().toSeq == sparkRange(st, sym, days, now), s"$sym $days")
+    assert(api.historicalData("A", "1h", "all", now).collect().head.isNullAt(0),
+      "nulls sort first ascending")
+    for (sym <- Seq("A", "B"); n <- 1 to 5)
+      assert(outcome(api.lastCloses(sym, "1h", n).toSeq) ==
+        outcome(sparkNewest(st, sym, n).map(_.getDouble(1)).reverse.toSeq), s"$sym n=$n")
+    assert(api.lastCloses("A", "1h", 1).toSeq == Seq(4.0), "nulls sort last descending")
+    assert(api.latestStoredTimestamp("A", "1h").contains(300L))
+    assert(api.latestStoredTimestamp("B", "1h").isEmpty)
+    // a newest candle without a timestamp is the predict route's 404
+    val e = intercept[NoSuchElementException](api.predict("B", "1h", persistence, Hour))
+    assert(e.getMessage == "B/1h")
   }
 }
