@@ -14,7 +14,7 @@ import graft.stream.OhlcvStreamJob
   * into the serving store. Prints one JSON line:
   * {"metric":"stream_candles_per_sec","value":...,"candles":N,...}
   *
-  * Usage: sbt "runMain graft.StreamBench [nCandles] [nSymbols]"
+  * Usage: sbt "runMain graft.StreamBench [nCandles] [nSymbols] [batchSize]"
   */
 object StreamBench {
   def main(args: Array[String]): Unit = {
@@ -25,7 +25,7 @@ object StreamBench {
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true") // batch merges in foreachBatch benefit; streaming plans ignore AQE
+      .config("spark.sql.adaptive.enabled", "true") // the closing compaction benefits; streaming plans ignore AQE
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
@@ -42,10 +42,8 @@ object StreamBench {
 
     val store = new ServingStore(Files.createTempDirectory("sb-store").toString)
     val mem = MemoryStream[String](1)(implicitly, spark.sqlContext)
-    val appendMode = args.drop(3).headOption.contains("append")
     val qs = OhlcvStreamJob.start(OhlcvStreamJob.parse(mem.toDF()), store,
-      Files.createTempDirectory("sb-ckpt").toString,
-      chartAppendLog = appendMode, statsVersionedLog = appendMode)
+      Files.createTempDirectory("sb-ckpt").toString)
     // split into micro-batches of ~2000 to exercise incremental state
     val batchSize = args.drop(2).headOption.map(_.toInt).getOrElse(2000)
     val batches = messages.grouped(batchSize).toSeq
@@ -59,13 +57,11 @@ object StreamBench {
     val sec = (System.nanoTime() - start) / 1e9
     val total = messages.size
     val latest = store.table(graft.schema.Schemas.Tables.Latest).count()
-    if (appendMode) store.compact(graft.schema.Schemas.Tables.ChartData, "doc_id", Some("dt"))
+    store.compact(graft.schema.Schemas.Tables.ChartData, "doc_id", Some("dt"))
     val chart = store.table(graft.schema.Schemas.Tables.ChartData).count()
-    val stats = if (appendMode)
-      store.tableLatestByEpoch(graft.schema.Schemas.Tables.Stats, "doc_id").count()
-    else store.table(graft.schema.Schemas.Tables.Stats).count()
+    val stats = store.tableCurrent(graft.schema.Schemas.Tables.Stats, "doc_id").count()
     println(s"""{"metric":"stream_candles_per_sec","value":${(total / sec).round},""" +
-      s""""candles":$total,"batches":${batches.size},"chart_sink":"${if (appendMode) "append" else "merge"}","seconds":${f"$sec%.1f"},""" +
+      s""""candles":$total,"batches":${batches.size},"seconds":${f"$sec%.1f"},""" +
       s""""latest_rows":$latest,"chart_rows":$chart,"stats_windows":$stats}""")
     spark.stop()
   }

@@ -144,9 +144,7 @@ object OhlcvBatchJob {
     * Cost honestly: the SAVINGS are the raw-history scan + window
     * recompute (now O(new + 29·keys)); the store-side passes (frontier
     * agg, tail top-k, upsert's anti-join merge) remain O(store) per run —
-    * columnar and heap-bounded, but a full-table rewrite in the merge
-    * (move to [[ServingStore.upsertPartitioned]] with a date partition to
-    * bound that too).
+    * columnar and heap-bounded, but a full-table rewrite in the merge.
     *
     * ASSUMES in-order arrival per key (true of the reference's crawler,
     * which pages forward from the frontier) — and VERIFIES it: an

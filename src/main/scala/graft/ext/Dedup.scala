@@ -43,8 +43,9 @@ object Dedup {
   val AutoCandTokens: Int = 16
 
   /** Enumeration-volume threshold (rows) above which the auto router
-    * abandons the exact self-join. Grounding (tools/AutoRouteStats,
-    * SCALING.md r12): the exact path emits Σ df·(df−1)/2 candidate-
+    * abandons the exact self-join. Grounding (tools/AutoRouteStats, last
+    * at commit dd46e98; SCALING.md r12): the exact path emits
+    * Σ df·(df−1)/2 candidate-
     * enumeration rows through its first exchange — ~24 bytes each, so
     * 2e9 rows ≈ 48 GB of shuffle scratch BEFORE pair-dedup. Measured
     * d3 volumes: 6.4e6 at sf0.1, 6.7e8 at sf1 (completes comfortably),
@@ -692,8 +693,9 @@ object Dedup {
     // size-ratio gate run INSIDE the slider lambda, and the two doc
     // sizes pack into one long — so the row entering the pair-dedup
     // exchange is 3 longs, not the 5 the Catalyst formulation shuffled
-    // (the r15 shuffle diet: D7ShuffleProbe measured the pair exchange
-    // as the largest d7 shuffle writer, and every byte here is written
+    // (the r15 shuffle diet: D7ShuffleProbe, last at commit dd46e98,
+    // measured the pair exchange as the largest d7 shuffle writer, and
+    // every byte here is written
     // once and read twice by the byA/byB cap consumers). Same Long ×
     // Double arithmetic as the old Catalyst filter, so the emitted pair
     // SET is bit-identical. The 31-bit n-pack is guarded: n counts

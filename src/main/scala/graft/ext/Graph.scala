@@ -63,7 +63,7 @@ object Graph {
   def pageRank(s: SparkSession, dir: String, iters: Int = 3): DataFrame = {
     // r15 lean loop (guide §2.4 — remove exchanges outright), output
     // row-identical to the pre-r15 shape (exceptAll 0 both ways at
-    // sf0.1 AND sf1, tools/G1Decomp):
+    // sf0.1 AND sf1, tools/G1Decomp, last at commit dd46e98):
     //  - `outdeg` is joined into the edge table ONCE outside the loop
     //    (loop-invariant), so each iteration is one edge⋈pr join + one
     //    keyed aggregate instead of two joins + an aggregate.
@@ -127,7 +127,8 @@ object Graph {
     // pattern). managed=false keeps the fully-lazy frame (plan-shape
     // inspection, A/B probes).
     // r15: the edge persist() is GONE. Re-measured interleaved
-    // (tools/G2G3Probe): persist+managed 8.9–43.7 s vs lazy+managed
+    // (tools/G2G3Probe, last at commit dd46e98): persist+managed
+    // 8.9–43.7 s vs lazy+managed
     // 6.4–15.8 s at sf0.1/sf1 — the persist's blocking materialization
     // plus cached-plan AQE penalties cost more than the lazy re-reads
     // it saves on both measured scales; rows identical (exceptAll 0).
@@ -201,7 +202,8 @@ object Graph {
   def pageRankBipartite(s: SparkSession, dir: String,
       iters: Int = 3): DataFrame = {
     // r15 lean loop (the pageRank rewrite applied to both hops), output
-    // row-identical (tools/G2G3Probe exceptAll 0 both ways, sf0.1/sf1):
+    // row-identical (tools/G2G3Probe, last at commit dd46e98: exceptAll
+    // 0 both ways, sf0.1/sf1):
     // pd/od are joined into the incidence ONCE outside the loop
     // (loop-invariant subtrees — AQE materializes each exchange once),
     // and the final `pdeg ⟕ partIn` re-attach is dropped — every ord
@@ -282,8 +284,9 @@ object Graph {
   /** Clique-edge volume threshold for the auto front doors: above this
     * many estimated half-edges (Σ m·(m−1)/2 over orders, m = distinct
     * parts per order) the per-order clique expansion is routed to the
-    * bipartite formulation. Grounding (tools/AutoRouteStats, SCALING.md
-    * r12): measured half-edge estimates are 1.2e6 at sf0.1, 1.2e7 at
+    * bipartite formulation. Grounding (tools/AutoRouteStats, last at
+    * commit dd46e98; SCALING.md r12): measured half-edge estimates are
+    * 1.2e6 at sf0.1, 1.2e7 at
     * sf1 (clique completes in ~21 s), 1.2e8 at sf10 — the measured wall
     * (a 625 s / 48 GB-driver cold build that OOMs below 32 GB). 3e7
     * sits 2.5× above sf1's volume and 4× under the wall.

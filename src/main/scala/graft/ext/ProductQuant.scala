@@ -565,7 +565,8 @@ object ProductQuant {
     * makes x19's recall decay with the corpus even when cell recall is
     * calibrated: at sf10 (n=200k, nprobe=58 → ~26k candidates) the
     * shipped 100 delivered recall@10 = 0.26 against the 0.75 cell-recall
-    * ceiling, while the measured sweep (AnnRecallProbe, r14) gave
+    * ceiling, while the measured sweep (AnnRecallProbe, r14, last at
+    * commit dd46e98) gave
     * 300→0.37, 1000→0.55, 3000→0.65 — ~1/8 of candidates recovers ~87 %
     * of the reachable ceiling on the WORST-case (near-random) corpus;
     * clustered corpora need less and can pass `shortlist` explicitly.

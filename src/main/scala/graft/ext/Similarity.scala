@@ -757,7 +757,8 @@ object Similarity {
     * whole vector table ships to every executor ONCE (~60 MB at sf10)
     * and the deduped pair stream never re-shuffles; above it the
     * re-attach falls back to the two id-keyed shuffle joins. The sf10
-    * decomposition (tools/E3Decomp) measured the shuffle re-attach at
+    * decomposition (tools/E3Decomp, last at commit dd46e98) measured
+    * the shuffle re-attach at
     * 495 s of e3's 476 s total — 379M pair rows carrying two 256-byte
     * embeddings through two exchanges (~100 GB) to feed ~80 s of
     * cosine math — while the table behind all of it was 61 MB.
@@ -882,7 +883,8 @@ object Similarity {
       nPlanes: Int = 0, hamming1Probes: Boolean = true,
       nTables: Int = 0): DataFrame = {
     val planes = resolveKnnPlanes(s, dir, nPlanes)
-    // LATE MATERIALIZATION (r10 session 3, A/B-proven in tools/E3Probe):
+    // LATE MATERIALIZATION (r10 session 3, A/B-proven in tools/E3Probe,
+    // last at commit dd46e98; Round10Session3Spec pins the equality):
     // the candidate join shuffles IDs only. The old shape carried the
     // 256-byte embedding on both sides of the (table_id, bucket)
     // exchange — ×nTables on the build side and ×nTables·(nPlanes+1)
@@ -926,8 +928,9 @@ object Similarity {
     // Re-attach router: the pair set is O(candidates) while the vector
     // table is O(n) — when the table fits a broadcast, shipping it once
     // beats re-shuffling every pair row with two embedding payloads
-    // (sf10: 61 MB table vs ~100 GB of pair exchange — tools/E3Decomp
-    // measured the shuffle re-attach at 495 s of e3's 476 s total).
+    // (sf10: 61 MB table vs ~100 GB of pair exchange — tools/E3Decomp,
+    // last at commit dd46e98, measured the shuffle re-attach at 495 s of
+    // e3's 476 s total).
     // Join method can't change the result (equi-join on a unique key);
     // above the wall the id-keyed shuffle joins remain the 100 TB shape.
     val (nVec, dim) = embStats(s, dir)
@@ -941,7 +944,8 @@ object Similarity {
       // recurs once per LSH table that collides it — ×16 at the
       // calibrated sf10 OR-depth) folds inside the dedup-aware bounded
       // top-k. The pair `distinct` — the largest e3 shuffle at sf10
-      // (E3Decomp: the 16-byte pair exchange carries the full raw
+      // (E3Decomp, last at commit dd46e98: the 16-byte pair exchange
+      // carries the full raw
       // multiset) — disappears; a duplicate now costs one repeated
       // cosine against broadcast-resident vectors instead of a trip
       // through the exchange. Output-identical: cosine is a

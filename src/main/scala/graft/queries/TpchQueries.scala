@@ -260,7 +260,7 @@ object TpchQueries {
     * pre-shuffle row, and Expand output defeats map-side combine); the
     * two-level form keeps both shuffles partially aggregated — measured
     * 1.8 s → 0.8 s at sf0.1, 3.2 s → 2.2 s at sf1, row-identical
-    * (tools/Q21Probe).
+    * (tools/Q21Probe, last at commit dd46e98).
     */
   def q21SoleBlame(s: SparkSession, dir: String): DataFrame = {
     t(s, dir, "lineitem")

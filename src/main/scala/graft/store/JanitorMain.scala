@@ -13,10 +13,10 @@ import graft.stream.Retention
   *
   *   1. retention: drop chart partitions older than the keep horizon
   *      (directory deletes, no data scan);
-  *   2. compaction: rewrite append-log sinks to deduped snapshots so the
-  *      O(batch) streaming write path doesn't accumulate replay
-  *      duplicates and small files forever (log+compact is the Delta
-  *      pattern in plain parquet — ServingStore.compact /
+  *   2. compaction: rewrite the chart and stats append-log sinks to
+  *      deduped snapshots so the O(batch) streaming write path doesn't
+  *      accumulate replay duplicates and small files forever (log+compact
+  *      is the Delta pattern in plain parquet — ServingStore.compact /
   *      compactVersioned).
   *
   * One-shot by design: schedule it like the reference schedules crawls
@@ -49,46 +49,18 @@ object JanitorMain {
     Retention.sweepChartData(store, now, keepHours)
     println(s"[janitor] retention swept ${Schemas.Tables.ChartData} " +
       s"(keep $keepHours h)")
-    // ChartData is the sink that actually accumulates: the default
-    // append-log-partitioned path lands one file set per 15 s micro-batch
-    // plus foreachBatch replay duplicates — compact it to a deduped
-    // day-partitioned snapshot (what StreamBench measures as the read-side
-    // win). Latest is overwrite-fed in the production topology (complete
-    // mode) so compaction there is a harmless no-op, kept for stores fed
-    // by the append variant.
+    // Compact the two append-fed stream sinks: chart (append-log, one file
+    // set per 15 s micro-batch plus foreachBatch replay duplicates) to a
+    // deduped day-partitioned snapshot, stats (epoch-versioned log) to its
+    // latest epoch per window. Latest is not touched: q1 overwrites it
+    // whole every batch, so it never accumulates.
     if (store.exists(Schemas.Tables.ChartData)) {
       store.compact(Schemas.Tables.ChartData, "doc_id", Some("dt"))
       println(s"[janitor] compacted ${Schemas.Tables.ChartData}")
     }
-    if (store.exists(Schemas.Tables.Latest)) {
-      // An append-fed latest log has DIFFERENT values per key across
-      // batches (each batch's candle supersedes the last), so
-      // dropDuplicates' arbitrary keeper could persist a stale candle.
-      // Pick the newest by epoch (versioned log) or event time instead;
-      // only a store with neither column — a value-deterministic doc_id
-      // log — falls back to plain dedup.
-      val cols = store.table(Schemas.Tables.Latest).columns
-      if (cols.contains("_epoch")) {
-        store.compactVersioned(Schemas.Tables.Latest, "symbol")
-        println(s"[janitor] compacted versioned ${Schemas.Tables.Latest}")
-      } else if (cols.contains("latest_event_timestamp")) {
-        store.compactLatestBy(Schemas.Tables.Latest, "symbol",
-          "latest_event_timestamp")
-        println(s"[janitor] compacted ${Schemas.Tables.Latest} by event time")
-      } else {
-        store.compact(Schemas.Tables.Latest, "symbol")
-        println(s"[janitor] compacted ${Schemas.Tables.Latest}")
-      }
-    }
     if (store.exists(Schemas.Tables.Stats)) {
-      // stats sink is the epoch-versioned log (update-mode corrections)
-      if (store.table(Schemas.Tables.Stats).columns.contains("_epoch")) {
-        store.compactVersioned(Schemas.Tables.Stats, "doc_id")
-        println(s"[janitor] compacted versioned ${Schemas.Tables.Stats}")
-      } else {
-        store.compact(Schemas.Tables.Stats, "doc_id")
-        println(s"[janitor] compacted ${Schemas.Tables.Stats}")
-      }
+      store.compactVersioned(Schemas.Tables.Stats, "doc_id")
+      println(s"[janitor] compacted versioned ${Schemas.Tables.Stats}")
     }
   }
 }

@@ -30,10 +30,10 @@ import org.apache.spark.sql.functions._
   * coordination.
   *
   * 100 TB posture: merge-on-write costs O(table) per batch — correct for
-  * small/complete-mode tables, wrong for big append streams. The O(batch)
-  * paths ([[appendLog]] / [[appendLogVersioned]] + janitor [[compact]])
-  * are the streaming defaults; [[upsertPartitioned]] day-partitions so a
-  * batch merge touches only the event-dates it contains.
+  * small/complete-mode tables, wrong for big append streams. The streaming
+  * sinks are the O(batch) paths ([[appendLogPartitioned]] /
+  * [[appendLogVersioned]]), deduplicated at read and by the janitor's
+  * [[compact]] / [[compactVersioned]].
   */
 final class ServingStore(val root: String)(implicit val spark: SparkSession) {
 
@@ -70,14 +70,13 @@ final class ServingStore(val root: String)(implicit val spark: SparkSession) {
         (Files.isDirectory(p) && !p.getFileName.toString.startsWith("."))))
   }
 
-  /** Read a table; empty DataFrame with the given schema if absent. */
+  /** Read a table; fails (`IllegalArgumentException`) if it does not
+    * exist — check [[exists]] first where absence is expected.
+    */
   def table(name: String): DataFrame = {
     require(exists(name), s"ServingStore table '$name' does not exist under $root")
     spark.read.parquet(dataDir(name).toString)
   }
-
-  def tableOr(name: String, fallback: => DataFrame): DataFrame =
-    if (exists(name)) table(name) else fallback
 
   /** Serving view of a table regardless of which sink fed it: versioned
     * logs resolve latest-epoch-per-key, plain logs dedup replays, merged
@@ -148,81 +147,6 @@ final class ServingStore(val root: String)(implicit val spark: SparkSession) {
     atomicSwapWrite(name, merged)
   }
 
-  /** Day-partitioned upsert for the chart-data table: the incoming batch
-    * only touches the event-dates it contains, so we merge and swap just
-    * those partition directories (the 100 TB path — a micro-batch never
-    * rewrites history). The merged data is written ONCE (to staging,
-    * partitioned); installing it is per-partition directory renames, not a
-    * second data write. Reproduces the reference's daily rolling index
-    * `crypto_ohlcv_1m_chartdata-YYYY-MM-DD` (stream_processor.py:153-155),
-    * but partitioned by EVENT date, not processing date (SURVEY.md §4.3.6).
-    */
-  def upsertPartitioned(name: String, keyCol: String, partCol: String,
-      incoming: DataFrame): Unit = {
-    val dir = tableDir(name)
-    if (Files.isDirectory(dir)) recoverRetiredPartitions(dir, partCol)
-    val incomingDedup = incoming.dropDuplicates(keyCol)
-    if (!exists(name)) {
-      incomingDedup.write.partitionBy(partCol)
-        .mode(SaveMode.Overwrite).parquet(dir.toString)
-    } else {
-      val touched = incomingDedup.select(partCol).distinct()
-        .collect().map(_.get(0))
-      val old = spark.read.option("basePath", dir.toString)
-        .parquet(dir.toString)
-        .filter(col(partCol).isin(touched.toIndexedSeq: _*)) // partition-pruned scan
-      val merged = old
-        .join(incomingDedup.select(keyCol), Seq(keyCol), "left_anti")
-        .unionByName(incomingDedup)
-      // materialize the merge ONCE into staging (the plan reads the very
-      // partitions we are about to replace), then install each touched
-      // partition with directory renames.
-      val staging = dir.resolveSibling(dir.getFileName.toString + ".staging")
-      deleteRecursively(staging)
-      merged.write.partitionBy(partCol).mode(SaveMode.Overwrite)
-        .parquet(staging.toString)
-      withList(staging) { entries =>
-        entries.forEach { p =>
-          val fn = p.getFileName.toString
-          if (fn.startsWith(partCol + "=")) {
-            val target = dir.resolve(fn)
-            val retired = dir.resolve("." + fn + ".retired")
-            deleteRecursively(retired)
-            if (Files.exists(target))
-              Files.move(target, retired, StandardCopyOption.ATOMIC_MOVE)
-            Files.move(p, target, StandardCopyOption.ATOMIC_MOVE)
-            deleteRecursively(retired)
-          }
-        }
-      }
-      deleteRecursively(staging)
-    }
-  }
-
-  /** Crash recovery for [[upsertPartitioned]]'s install sequence: a crash
-    * between "move live partition to `.X.retired`" and "install staging copy"
-    * leaves the partition absent from the table with the retired dir holding
-    * the only copy — a later merge would silently drop those rows. On entry
-    * we restore any orphaned retired dir whose target is missing (crash
-    * mid-install) and drop retired dirs whose target exists (crash after a
-    * successful install, before cleanup).
-    */
-  private def recoverRetiredPartitions(dir: Path, partCol: String): Unit =
-    withList(dir) { entries =>
-      val retired = new scala.collection.mutable.ArrayBuffer[Path]
-      entries.forEach { p =>
-        val fn = p.getFileName.toString
-        if (fn.startsWith("." + partCol + "=") && fn.endsWith(".retired"))
-          retired += p
-      }
-      retired.foreach { p =>
-        val fn = p.getFileName.toString
-        val target = dir.resolve(fn.stripPrefix(".").stripSuffix(".retired"))
-        if (Files.exists(target)) deleteRecursively(p)
-        else Files.move(p, target, StandardCopyOption.ATOMIC_MOVE)
-      }
-    }
-
   /** Retention sweep: drop partitions of `name` whose `partCol` value is
     * strictly older than `keepFrom` (ISO date string). Reproduces the
     * reference's 2 h ILM delete on chartdata-* (README.md:74-82) as a
@@ -246,9 +170,10 @@ final class ServingStore(val root: String)(implicit val spark: SparkSession) {
   /** Append-log sink: O(batch) per micro-batch — each batch lands as new
     * files, duplicates (foreachBatch replays) are tolerated in the log and
     * removed by [[compact]] or at read time via [[tableDeduped]]. This is
-    * the high-throughput streaming DEFAULT: the merge-on-write [[upsert]]
-    * costs O(partition) per batch, which dominates micro-batch latency
-    * once partitions outgrow batches (measured in StreamBench).
+    * the high-throughput streaming path: the merge-on-write [[upsert]]
+    * costs O(table) per batch, which dominates micro-batch latency once
+    * tables outgrow batches (measured by StreamBench's merge mode, last
+    * present at commit dd46e98).
     */
   def appendLog(name: String, incoming: DataFrame): Unit =
     incoming.write.mode(SaveMode.Append).parquet(dataDir(name).toString)
@@ -256,7 +181,9 @@ final class ServingStore(val root: String)(implicit val spark: SparkSession) {
   /** Day-partitioned append-log: O(batch) appends that land inside
     * `partCol=` partition directories — the 100 TB layout for the chart
     * stream (reads prune by date, [[dropPartitionsBefore]] retention stays
-    * a directory delete).
+    * a directory delete). Reproduces the reference's daily rolling index
+    * `crypto_ohlcv_1m_chartdata-YYYY-MM-DD` (stream_processor.py:153-155),
+    * partitioned by EVENT date, not processing date (SURVEY.md §4.3.6).
     */
   def appendLogPartitioned(name: String, incoming: DataFrame,
       partCol: String): Unit =
@@ -289,40 +216,23 @@ final class ServingStore(val root: String)(implicit val spark: SparkSession) {
   def appendLogVersioned(name: String, incoming: DataFrame, epochId: Long): Unit =
     appendLog(name, incoming.withColumn("_epoch", lit(epochId)))
 
-  /** Latest-epoch-wins read over a versioned log. */
-  def tableLatestByEpoch(name: String, keyCol: String): DataFrame =
-    latestByEpoch(table(name), keyCol)
-
   private def latestByEpoch(t: DataFrame, keyCol: String): DataFrame =
-    newestPerKey(t, keyCol, "_epoch").drop("_epoch")
+    newestEpochPerKey(t, keyCol).drop("_epoch")
 
-  /** One row per `keyCol`: the one with the greatest `orderCol`. */
-  private def newestPerKey(t: DataFrame, keyCol: String,
-      orderCol: String): DataFrame = {
+  /** One row per `keyCol`: the one with the greatest `_epoch`. */
+  private def newestEpochPerKey(t: DataFrame, keyCol: String): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(keyCol).orderBy(col(orderCol).desc)
+      .partitionBy(keyCol).orderBy(col("_epoch").desc)
     t.withColumn("_rn", row_number().over(w))
       .filter(col("_rn") === 1)
       .drop("_rn")
   }
 
-  /** Compact to the newest row per key by an EVENT-TIME column — for
-    * latest-style sinks fed by the append log, where replayed batches
-    * carry DIFFERENT values per key (a later candle supersedes an earlier
-    * one) and `dropDuplicates`'s arbitrary keeper could durably persist a
-    * stale row. row_number over (key, orderCol desc) picks the newest
-    * deterministically; ties on orderCol (same event re-appended) are
-    * value-identical so the arbitrary tiebreak is safe.
-    */
-  def compactLatestBy(name: String, keyCol: String, orderCol: String,
-      partCol: Option[String] = None): Unit =
-    atomicSwapWrite(name, newestPerKey(table(name), keyCol, orderCol), partCol)
-
   /** Compact a versioned log to its latest-epoch snapshot (epoch column
     * retained so further appends keep working).
     */
   def compactVersioned(name: String, keyCol: String): Unit =
-    atomicSwapWrite(name, newestPerKey(table(name), keyCol, "_epoch"))
+    atomicSwapWrite(name, newestEpochPerKey(table(name), keyCol))
 
   /** Full overwrite (for `es.write.operation=index` complete-mode sinks on
     * tiny tables, e.g. latest-candle-per-symbol — complete mode re-emits

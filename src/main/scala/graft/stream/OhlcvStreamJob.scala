@@ -25,8 +25,10 @@ import graft.store.ServingStore
   *   - no `df.count()` recomputation inside foreachBatch
   *     (stream_processor.py:100,135,164) — the store write is the action.
   *
-  * Sinks are ServingStore upserts keyed on the reference's doc_id formulas,
-  * so at-least-once foreachBatch delivery has exactly-once effect (T9).
+  * Sinks are ServingStore writes whose reads key on the reference's doc_id
+  * formulas, so at-least-once foreachBatch delivery has exactly-once effect
+  * (T9): q1 overwrites, q2's latest epoch wins per doc_id, q3's replays
+  * dedup by doc_id at read and compaction.
   */
 object OhlcvStreamJob {
 
@@ -157,9 +159,7 @@ object OhlcvStreamJob {
     * MemoryStream-backed frame.
     */
   def start(parsed: DataFrame, store: ServingStore, checkpointRoot: String,
-      triggers: Triggers = Triggers.AsFastAsPossible,
-      chartAppendLog: Boolean = true,
-      statsVersionedLog: Boolean = true): Seq[StreamingQuery] = {
+      triggers: Triggers = Triggers.AsFastAsPossible): Seq[StreamingQuery] = {
     val wm = withWatermarked(parsed)
     def trig[T](ms: Option[Long])(b: org.apache.spark.sql.streaming.DataStreamWriter[T]) =
       ms.fold(b)(m => b.trigger(Trigger.ProcessingTime(m)))
@@ -170,8 +170,6 @@ object OhlcvStreamJob {
     //   q2 update mode → epoch-versioned append, O(batch); latest epoch
     //      wins at read (window corrections supersede);
     //   q3 append mode → append-log, O(batch); doc_id dedup at read/compact.
-    // The merge-on-write store paths remain available via the flags for
-    // small deployments that want merged tables on every batch.
     val q1 = trig(triggers.latestMs)(latestAgg(parsed).writeStream
       .outputMode("complete") // stream_processor.py:108; state = 1 row/symbol
       .option("checkpointLocation", s"$checkpointRoot/latest_ohlcv")
@@ -183,18 +181,14 @@ object OhlcvStreamJob {
       .outputMode("update") // stream_processor.py:143
       .option("checkpointLocation", s"$checkpointRoot/ohlcv_stats")
       .foreachBatch { (df: DataFrame, epochId: Long) =>
-        if (statsVersionedLog)
-          store.appendLogVersioned(Schemas.Tables.Stats, df, epochId)
-        else store.upsert(Schemas.Tables.Stats, "doc_id", df)
+        store.appendLogVersioned(Schemas.Tables.Stats, df, epochId)
       }).start()
 
     val q3 = trig(triggers.chartMs)(chartRows(wm).writeStream
       .outputMode("append") // stream_processor.py:172
       .option("checkpointLocation", s"$checkpointRoot/raw_ohlcv_chart")
       .foreachBatch { (df: DataFrame, _: Long) =>
-        if (chartAppendLog)
-          store.appendLogPartitioned(Schemas.Tables.ChartData, df, "dt")
-        else store.upsertPartitioned(Schemas.Tables.ChartData, "doc_id", "dt", df)
+        store.appendLogPartitioned(Schemas.Tables.ChartData, df, "dt")
       }).start()
 
     Seq(q1, q2, q3)

@@ -41,8 +41,7 @@ object StreamMain {
     val parsed = OhlcvStreamJob.parse(KafkaSource.load(spark, cfg))
     val store = new ServingStore(storeRoot)
     OhlcvStreamJob.start(parsed, store, checkpointRoot,
-      OhlcvStreamJob.Triggers.Reference,          // 15 s / 60 s / 15 s (T5)
-      chartAppendLog = true, statsVersionedLog = true) // O(batch) sinks
+      OhlcvStreamJob.Triggers.Reference)          // 15 s / 60 s / 15 s (T5)
     spark.streams.awaitAnyTermination()           // T7
   }
 }

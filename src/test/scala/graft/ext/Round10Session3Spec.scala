@@ -1,6 +1,10 @@
 package graft.ext
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
+
 import graft.SparkSpec
+import graft.functions.Expressions.cosineF
 
 /** Round-10 session-3 exchange-volume rewrites: every compact-key /
   * late-materialization path must be output-identical to the literal
@@ -16,6 +20,30 @@ class Round10Session3Spec extends SparkSpec {
     // and the other adds a spurious one)
     assert(a.exceptAll(b).isEmpty, s"$what: rows only in the first side")
     assert(b.exceptAll(a).isEmpty, s"$what: rows only in the second side")
+  }
+
+  /** The pre-r10s3 e3 shape: embeddings ride through the (table_id,
+    * bucket) candidate exchange on both sides, Hamming-1 probes explode
+    * the left side, and `distinct` runs on (pair, cosine).
+    */
+  private def knnJoinEmbeddingCarrying(dir: String, k: Int, nPlanes: Int,
+      nTables: Int): DataFrame = {
+    val probes = array((col("bucket") +: (0 until nPlanes).map(i =>
+      col("bucket").bitwiseXOR(lit(1L << i)))): _*)
+    val b = Similarity.lshBucketsMulti(spark, dir, nPlanes, nTables)
+    val l = b.select(col("vec_id").as("src_id"),
+      col("embedding").as("src_emb"), col("table_id"),
+      explode(probes).as("bucket"))
+    val r = b.select(col("vec_id").as("nb_id"),
+      col("embedding").as("nb_emb"), col("table_id"), col("bucket"))
+    val cand = SkewSafe.cappedEquiJoin(l, r, Seq("table_id", "bucket"),
+        xxhash64(col("nb_id")), cap = 1024)
+      .filter(col("src_id") =!= col("nb_id"))
+      .select(col("src_id"), col("nb_id"),
+        cosineF(col("src_emb"), col("nb_emb")).as("cosine"))
+      .distinct()
+    graft.plans.TopKPerGroup.topK(cand, Seq("src_id"), "cosine", k,
+      desc = true, tiebreakCols = Seq("nb_id"))
   }
 
   test("d3: compact xxhash64(lang,source,shingle) join keys mine pairs " +
@@ -164,8 +192,9 @@ class Round10Session3Spec extends SparkSpec {
       "the embedding-carrying shape") {
     val dir = sf("sf0.01")
     identical(
-      graft.tools.E3Probe.knnJoinVariant(spark, dir, "late"),
-      graft.tools.E3Probe.knnJoinVariant(spark, dir, "base"),
+      Similarity.knnJoin(spark, dir, k = 3, nPlanes = 8,
+        hamming1Probes = true, nTables = 4),
+      knnJoinEmbeddingCarrying(dir, k = 3, nPlanes = 8, nTables = 4),
       "e3 late materialization")
   }
 }

@@ -15,36 +15,13 @@ class ServingStoreSpec extends SparkSpec {
 
   private def tmp(p: String) = Files.createTempDirectory(p).toString
 
-  test("upsertPartitioned only rewrites touched partitions") {
-    implicit val s = spark
-    import spark.implicits._
-    val store = new ServingStore(tmp("part-store"))
-    store.upsertPartitioned("t", "id", "dt", Seq(
-      ("a", "2024-06-01", 1.0), ("b", "2024-06-02", 2.0))
-      .toDF("id", "dt", "v"))
-    val d1 = Paths.get(store.root, "t", "dt=2024-06-01")
-    val before = Files.getLastModifiedTime(
-      Files.list(d1).filter(_.toString.endsWith(".parquet")).findFirst().get())
-    Thread.sleep(20)
-    // touch only 2024-06-02
-    store.upsertPartitioned("t", "id", "dt",
-      Seq(("b", "2024-06-02", 20.0), ("c", "2024-06-02", 3.0))
-        .toDF("id", "dt", "v"))
-    val after = Files.getLastModifiedTime(
-      Files.list(d1).filter(_.toString.endsWith(".parquet")).findFirst().get())
-    assert(before == after, "untouched partition was rewritten")
-    val rows = store.table("t").collect()
-      .map(r => r.getAs[String]("id") -> r.getAs[Double]("v")).toMap
-    assert(rows == Map("a" -> 1.0, "b" -> 20.0, "c" -> 3.0))
-  }
-
   test("dropPartitionsBefore removes only expired partitions (retention)") {
     implicit val s = spark
     import spark.implicits._
     val store = new ServingStore(tmp("ret-store"))
-    store.upsertPartitioned("t", "id", "dt", Seq(
+    store.appendLogPartitioned("t", Seq(
       ("a", "2024-06-01", 1.0), ("b", "2024-06-02", 2.0),
-      ("c", "2024-06-03", 3.0)).toDF("id", "dt", "v"))
+      ("c", "2024-06-03", 3.0)).toDF("id", "dt", "v"), "dt")
     store.dropPartitionsBefore("t", "dt", "2024-06-02")
     val dts = store.table("t").select("dt").collect()
       .map(r => String.valueOf(r.get(0))).sorted
@@ -82,13 +59,13 @@ class ServingStoreSpec extends SparkSpec {
     val store = new ServingStore(tmp("vlog-store"))
     store.appendLogVersioned("t", Seq(("w1", 10.0), ("w2", 20.0)).toDF("id", "v"), 1L)
     store.appendLogVersioned("t", Seq(("w1", 11.0)).toDF("id", "v"), 2L) // correction
-    val latest = store.tableLatestByEpoch("t", "id").collect()
+    val latest = store.tableCurrent("t", "id").collect()
       .map(r => r.getString(0) -> r.getDouble(1)).toMap
     assert(latest == Map("w1" -> 11.0, "w2" -> 20.0))
     store.compactVersioned("t", "id")
     assert(store.table("t").count() == 2)
     store.appendLogVersioned("t", Seq(("w2", 21.0)).toDF("id", "v"), 3L)
-    assert(store.tableLatestByEpoch("t", "id").collect()
+    assert(store.tableCurrent("t", "id").collect()
       .map(r => r.getString(0) -> r.getDouble(1)).toMap ==
       Map("w1" -> 11.0, "w2" -> 21.0))
   }
@@ -129,43 +106,6 @@ class ServingStoreSpec extends SparkSpec {
     assert(snap3 != snap2)
   }
 
-  test("upsertPartitioned recovers a partition stranded mid-install (crash)") {
-    implicit val s = spark
-    import spark.implicits._
-    val store = new ServingStore(tmp("crash-store"))
-    store.upsertPartitioned("t", "id", "dt", Seq(
-      ("a", "2024-06-01", 1.0), ("b", "2024-06-02", 2.0))
-      .toDF("id", "dt", "v"))
-    // simulate a crash between "retire live partition" and "install staging":
-    // the live dir is gone and the retired dir holds the only copy
-    val dir = Paths.get(store.root, "t")
-    Files.move(dir.resolve("dt=2024-06-01"),
-      dir.resolve(".dt=2024-06-01.retired"))
-    // next upsert (touching a DIFFERENT date) must restore the stranded
-    // partition before merging, not silently drop its rows
-    store.upsertPartitioned("t", "id", "dt",
-      Seq(("c", "2024-06-02", 3.0)).toDF("id", "dt", "v"))
-    val rows = store.table("t").collect()
-      .map(r => r.getAs[String]("id") -> r.getAs[Double]("v")).toMap
-    assert(rows == Map("a" -> 1.0, "b" -> 2.0, "c" -> 3.0),
-      s"stranded partition rows lost: $rows")
-    assert(!Files.exists(dir.resolve(".dt=2024-06-01.retired")))
-    // crash AFTER install but before cleanup: retired dir is a stale copy
-    // whose target exists — recovery must drop it, not resurrect old data
-    store.upsertPartitioned("t", "id", "dt",
-      Seq(("a", "2024-06-01", 10.0)).toDF("id", "dt", "v"))
-    val d1 = dir.resolve("dt=2024-06-01")
-    val copy = dir.resolve(".dt=2024-06-01.retired")
-    Files.createDirectory(copy)
-    Files.list(d1).forEach(p =>
-      Files.copy(p, copy.resolve(p.getFileName.toString)))
-    store.upsertPartitioned("t", "id", "dt",
-      Seq(("d", "2024-06-03", 4.0)).toDF("id", "dt", "v"))
-    assert(!Files.exists(copy), "stale retired copy not cleaned up")
-    assert(store.table("t").filter(col("id") === "a").collect()
-      .head.getAs[Double]("v") == 10.0)
-  }
-
   test("tableCurrent: versioned log resolves latest epoch, plain log dedups") {
     implicit val s = spark
     import spark.implicits._
@@ -191,12 +131,6 @@ class ServingStoreSpec extends SparkSpec {
     store.appendLogPartitioned(Tables.ChartData, Seq(
       ("b", "2024-06-03", 2.0), ("c", "2024-06-03", 3.0))
       .toDF("doc_id", "dt", "v"), "dt")
-    // latest: append-fed log where batches carry DIFFERENT values per key
-    // (each candle supersedes the last) — compaction must keep the newest
-    // by event time, not an arbitrary dropDuplicates keeper
-    store.appendLog(Tables.Latest, Seq(
-      ("BTC", 1000L, 1.0), ("BTC", 2000L, 2.0), ("BTC", 1500L, 1.5))
-      .toDF("symbol", "latest_event_timestamp", "v"))
     // stats: versioned log with a correction
     store.appendLogVersioned(Tables.Stats, Seq(("w1", 1.0)).toDF("doc_id", "v"), 1L)
     store.appendLogVersioned(Tables.Stats, Seq(("w1", 2.0)).toDF("doc_id", "v"), 2L)
@@ -207,33 +141,9 @@ class ServingStoreSpec extends SparkSpec {
       Seq("2024-06-03"), "expired partition survived retention")
     assert(chart.map(_.getAs[String]("doc_id")).sorted.toSeq == Seq("b", "c"),
       "replayed chart rows survived compaction")
-    val latestRows = store.table(Tables.Latest).collect()
-    assert(latestRows.length == 1 &&
-      latestRows.head.getAs[Double]("v") == 2.0,
-      s"latest compaction kept a stale candle: ${latestRows.mkString(",")}")
     val statsRows = store.table(Tables.Stats).collect()
     assert(statsRows.length == 1 && statsRows.head.getAs[Double]("v") == 2.0,
       "versioned compaction did not keep latest epoch")
-  }
-
-  test("compactLatestBy keeps the newest row per key by event time") {
-    implicit val s = spark
-    import spark.implicits._
-    val store = new ServingStore(tmp("latestby-store"))
-    store.appendLog("latest", Seq(
-      ("BTC", 3000L, 3.0), ("BTC", 1000L, 1.0),
-      ("ETH", 500L, 5.0), ("ETH", 700L, 7.0))
-      .toDF("symbol", "ts", "v"))
-    store.compactLatestBy("latest", "symbol", "ts")
-    val rows = store.table("latest").collect()
-      .map(r => (r.getAs[String]("symbol"), r.getAs[Double]("v"))).toMap
-    assert(rows == Map("BTC" -> 3.0, "ETH" -> 7.0),
-      s"stale rows survived event-time compaction: $rows")
-    // further appends still work after compaction (schema unchanged)
-    store.appendLog("latest", Seq(("BTC", 4000L, 4.0)).toDF("symbol", "ts", "v"))
-    store.compactLatestBy("latest", "symbol", "ts")
-    assert(store.table("latest").filter(col("symbol") === "BTC")
-      .collect().head.getAs[Double]("v") == 4.0)
   }
 
   test("property: every event lands in exactly window/slide sliding windows") {
