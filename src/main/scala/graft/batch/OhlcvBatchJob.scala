@@ -1,9 +1,12 @@
 package graft.batch
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, TimestampType}
+import org.apache.spark.sql.types.{BooleanType, DoubleType, LongType, StringType,
+  StructField, StructType, TimestampType}
 
 import graft.schema.Schemas
 import graft.store.ServingStore
@@ -113,7 +116,8 @@ object OhlcvBatchJob {
 
   /** Run the job end-to-end: upsert features into the historical table
     * (batch_processor.py:142-148 / S4 — `es.write.operation=upsert` keyed
-    * on doc_id becomes ServingStore.upsert).
+    * on doc_id becomes ServingStore.upsert). The swap leaves the table's
+    * [[HistoryTail]] index stale; the next [[runIncremental]] rebuilds it.
     */
   def run(spark: SparkSession, paths: Seq[String], store: ServingStore,
       verbose: Boolean = false): Long = {
@@ -135,16 +139,29 @@ object OhlcvBatchJob {
     * hour; the A6 frontier query exists precisely to avoid it,
     * hourly_updater.py:70-97).
     *
-    * The SMA row frames need the 29 candles BEFORE each new row, so the
-    * stored tail (last 29 rows per key via the bounded-heap top-k
-    * operator — row-count-based, not a time-based guess that row frames
-    * would disagree with on gappy feeds) is unioned in for the window
-    * pass and dropped before the upsert.
+    * The frontier and the SMA lookback (the last 29 stored rows per key —
+    * row-count-based, not a time-based guess that row frames would
+    * disagree with on gappy feeds) come from the table's [[HistoryTail]]
+    * side index, trusted only when it was written for the table's current
+    * [[ServingStore.version]]; otherwise one top-k pass over the table
+    * rebuilds it (the first run after a full [[run]] or a compaction pays
+    * that pass). The window pass runs over that local tail plus the fresh
+    * rows, and the tail rows are dropped again before the write. After its
+    * append, the run stores the advanced index only if the table holds
+    * exactly what it read plus the appended file.
     *
-    * Cost honestly: the SAVINGS are the raw-history scan + window
-    * recompute (now O(new + 29·keys)); the store-side passes (frontier
-    * agg, tail top-k, upsert's anti-join merge) remain O(store) per run —
-    * columnar and heap-bounded, but a full-table rewrite in the merge.
+    * Cost: in the in-order steady state the run reads no file of the
+    * historical table. Its work is the scan of `paths`, a window pass over
+    * O(new + 29·keys) local rows, and one appended parquet file. The append
+    * needs no merge: a fresh row is newer than its key's frontier, and its
+    * `doc_id` (`{symbol}_{timeframe}_hist_{timestamp}`, whose timeframe
+    * holds no `_`) parses back to that one key, so no stored row shares it.
+    * Fresh rows are deduplicated by `doc_id` within the batch. That is
+    * O(new rows) only for the updater's delivery shape: files of candles
+    * newer than the frontier, or re-delivering candles the tail still
+    * holds. Rows older than the tail run a Spark probe against the table
+    * (restricted to their pairs), so a caller that passes the whole raw
+    * history pays an O(table) probe.
     *
     * ASSUMES in-order arrival per key (true of the reference's crawler,
     * which pages forward from the frontier) — and VERIFIES it: an
@@ -152,61 +169,71 @@ object OhlcvBatchJob {
     * (re-delivered gap candle) or stored with different OHLCV values
     * (upstream correction) cannot be patched by a frontier-filtered pass
     * — its own SMA and the SMAs of up to 29 stored rows after it are all
-    * stale — so detection of either falls back to the full [[run]]. The
-    * probe costs one broadcast frontier filter over the incoming batch
-    * plus a join against the store's (doc_id, ohlcv) columns; in the
-    * in-order steady state the probe side is empty and AQE
-    * short-circuits the join.
+    * stale — so detection of either falls back to the full [[run]]
+    * ([[HistoryTail.storedDiffers]] states the rule). Exact
+    * double equality is right here: an unchanged candle re-parses to
+    * bit-identical doubles.
     */
   def runIncremental(spark: SparkSession, paths: Seq[String],
       store: ServingStore): Long = {
     if (!store.exists(Schemas.Tables.Historical))
       return run(spark, paths, store)
-    val hist = store.table(Schemas.Tables.Historical)
-    val frontier = hist.groupBy("symbol", "timeframe")
-      .agg(max("timestamp").as("_frontier"))
-    def newerThanFrontier(df: DataFrame): DataFrame = df
-      .join(broadcast(frontier), Seq("symbol", "timeframe"), "left")
-      .filter(col("_frontier").isNull || col("timestamp") > col("_frontier"))
-      .drop("_frontier")
+    val before = store.version(Schemas.Tables.Historical).get
+    val index = HistoryTail.current(store, before)
+    val keys = Seq("symbol", "timeframe")
+    // a space joins the key: neither a symbol nor a timeframe holds one
+    val floors = typedLit(index.floors.map { case ((s, t), lo) => s"$s $t" -> lo })
     val incoming = normalize(extractMetadata(scanRaw(spark, paths)))
-    // a backfill is an at-or-below-frontier row that is MISSING from the
-    // store (re-delivered gap candle) OR PRESENT WITH DIFFERENT VALUES
-    // (upstream correction) — both invalidate stored SMAs downstream of
-    // the row, so both force the full recompute. Exact double equality is
-    // right here: an unchanged candle re-parses to bit-identical doubles.
-    val stored = hist.select(col("doc_id"), col("open").as("_so"),
-      col("high").as("_sh"), col("low").as("_sl"),
-      col("close").as("_sc"), col("volume").as("_sv"))
-    val backfills = withDocId(incoming)
-      .join(broadcast(frontier), Seq("symbol", "timeframe"), "left")
-      .filter(col("_frontier").isNotNull && col("timestamp") <= col("_frontier"))
-      .join(stored, Seq("doc_id"), "left")
-      .filter(col("_so").isNull ||
-        col("_so") =!= col("open") || col("_sh") =!= col("high") ||
-        col("_sl") =!= col("low") || col("_sc") =!= col("close") ||
-        col("_sv") =!= col("volume"))
-    if (!backfills.isEmpty) return run(spark, paths, store)
-    // timestamps are unique per key (doc_id is keyed on them), so no
-    // tiebreak column is needed for determinism
-    val tail = graft.plans.TopKPerGroup.topK(hist,
-        Seq("symbol", "timeframe"), "timestamp", 29, desc = true)
-      .select(col("timestamp").cast(TimestampType).as("timestamp_dt"),
-        col("timestamp"), col("symbol"), col("timeframe"),
+      .withColumn("_old", coalesce(col("timestamp") <
+        try_element_at(floors, concat_ws(" ", col("symbol"), col("timeframe"))), lit(false)))
+    // one scan of `paths`: the rows a local check can decide come back to
+    // the driver, and the pairs of the rows older than their key's tail are
+    // observed on the way (no row of theirs is collected)
+    val older = Observation("rows older than the tail")
+    // (symbol, timeframe, micros, timestamp, ohlcv): the local window
+    // frame's row without `_fresh`; from index 3 on, a HistoryTail row
+    val near = incoming
+      .observe(older, collect_set(when(col("_old"), struct(keys.map(col): _*))).as("pairs"))
+      .filter(col("timestamp").isNotNull && !col("_old"))
+      .select(col("symbol"), col("timeframe"),
+        unix_micros(col("timestamp_dt")).as("_micros"), col("timestamp"),
         col("open"), col("high"), col("low"), col("close"), col("volume"))
-    val fresh = newerThanFrontier(incoming)
+      .collect()
+    val olderPairs = older.get("pairs").asInstanceOf[scala.collection.Seq[Row]].toSeq
+    if (olderPairs.nonEmpty &&
+        !HistoryTail.storedDiffers(store, incoming.filter(col("_old")), olderPairs).isEmpty)
+      return run(spark, paths, store)
+    def key(r: Row) = (r.getString(0), r.getString(1))
+    def candle(r: Row) = Row.fromSeq(r.toSeq.drop(3))
+    val (newer, atOrBelow) =
+      near.partition(r => index.frontier(key(r)).forall(r.getLong(3) > _))
+    if (atOrBelow.exists(r => index.changed(key(r), candle(r))))
+      return run(spark, paths, store)
+    val fresh = newer.distinctBy(r => (key(r), r.getLong(3)))
+      .groupBy(key).map { case (k, rs) => k -> rs.sortBy(_.getLong(3)).toSeq }
+    if (fresh.isEmpty) return 0L
     // tail rows re-enter the window only as lookback: their own SMA is
-    // truncated here, so they must not be re-upserted
-    val features = newerThanFrontier(
-      withDocId(withSmaFeatures(tail.unionByName(fresh))))
-      .select("timestamp", "symbol", "timeframe",
-        "open", "high", "low", "close", "volume", "sma_7", "sma_30", "doc_id")
-    if (features.isEmpty) return 0L
-    val cached = features.cache()
-    try {
-      val n = cached.count()
-      store.upsert(Schemas.Tables.Historical, "doc_id", cached)
-      n
-    } finally { cached.unpersist() }
+    // truncated here, so they must not be written again
+    val frame = fresh.toSeq.flatMap { case (k, rs) =>
+      index.lookback(k).map(t => Row.fromSeq(Seq(k._1, k._2,
+        if (t.isNullAt(0)) null else t.getLong(0) * 1000000L) ++ t.toSeq :+ false)) ++
+        rs.map(r => Row.fromSeq(r.toSeq :+ true))
+    }
+    val local = spark.createDataFrame(frame.asJava, StructType(
+      Seq("symbol", "timeframe").map(StructField(_, StringType)) ++
+      Seq("_micros", "timestamp").map(StructField(_, LongType)) ++
+      Seq("open", "high", "low", "close", "volume").map(StructField(_, DoubleType)) :+
+      StructField("_fresh", BooleanType)))
+    // one partition, so the window needs no exchange and the batch lands as
+    // the one file writeAfterAppend expects; cast to the stored schema, so
+    // the appended file reads back with the snapshot's column order and types
+    val features = withDocId(withSmaFeatures(local.coalesce(1)
+        .withColumn("timestamp_dt", timestamp_micros(col("_micros")))))
+      .filter(col("_fresh"))
+      .select(index.schema.fields.map(f => col(f.name).cast(f.dataType)).toSeq: _*)
+    store.appendLog(Schemas.Tables.Historical, features)
+    HistoryTail.writeAfterAppend(store,
+      index.append(fresh.map { case (k, rs) => k -> rs.map(candle) }), before)
+    fresh.valuesIterator.map(_.size.toLong).sum
   }
 }

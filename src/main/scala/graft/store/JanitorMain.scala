@@ -17,12 +17,19 @@ import graft.stream.Retention
   *      deduped snapshots so the O(batch) streaming write path doesn't
   *      accumulate replay duplicates and small files forever (log+compact
   *      is the Delta pattern in plain parquet — ServingStore.compact /
-  *      compactVersioned).
+  *      compactVersioned), and fold the historical table's hourly appended
+  *      files into one snapshot (every history read lists them) when an
+  *      hourly batch appended any since the table's last swap.
   *
   * One-shot by design: schedule it like the reference schedules crawls
   * (crontab, README.md:156-160). Single-writer assumption: run it when
-  * the streaming job is paused, or accept losing appends that land
-  * between a log read and its pointer swap (documented in compact).
+  * the streaming job and the hourly batch are paused, or accept losing
+  * appends that land between a log read and its pointer swap (documented
+  * in compact). History compaction must not overlap the hourly batch: a
+  * candle file appended in that gap is lost from the table. The batch
+  * then leaves its tail index stale (HistoryTail.writeAfterAppend), so the
+  * next hourly run rebuilds it from the table and appends re-delivered
+  * candles again instead of trusting a frontier past the lost ones.
   *
   * Usage: sbt "runMain graft.store.JanitorMain <storeDir> [keepHours]"
   */
@@ -61,6 +68,15 @@ object JanitorMain {
     if (store.exists(Schemas.Tables.Stats)) {
       store.compactVersioned(Schemas.Tables.Stats, "doc_id")
       println(s"[janitor] compacted versioned ${Schemas.Tables.Stats}")
+    }
+    // History: runIncremental appends one file per hourly batch, and
+    // ServingStore.version walks every file on each history request. The
+    // swap invalidates the batch's tail index and the next runIncremental
+    // rebuilds it, so a table no batch appended to since its last swap is
+    // left as it is.
+    if (store.holdsAppends(Schemas.Tables.Historical)) {
+      store.compact(Schemas.Tables.Historical, "doc_id")
+      println(s"[janitor] compacted ${Schemas.Tables.Historical}")
     }
   }
 }

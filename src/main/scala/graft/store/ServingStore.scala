@@ -30,10 +30,15 @@ import org.apache.spark.sql.functions._
   * coordination.
   *
   * 100 TB posture: merge-on-write costs O(table) per batch — correct for
-  * small/complete-mode tables, wrong for big append streams. The streaming
-  * sinks are the O(batch) paths ([[appendLogPartitioned]] /
-  * [[appendLogVersioned]]), deduplicated at read and by the janitor's
-  * [[compact]] / [[compactVersioned]].
+  * small/complete-mode tables, wrong for big append streams. [[upsert]]
+  * now serves only the batch layer's full `run`. The streaming sinks are
+  * the O(batch) paths ([[appendLogPartitioned]] / [[appendLogVersioned]]),
+  * deduplicated at read and by the janitor's [[compact]] /
+  * [[compactVersioned]]. The hourly batch appends too ([[appendLog]]):
+  * it writes only keys provably absent from the table, so the merge would
+  * be a no-op. It finds its frontier in a [[sideFile]] that it trusts only
+  * while the file's recorded [[version]] is the table's current one, so
+  * the in-order batch reads no data file of the table.
   */
 final class ServingStore(val root: String)(implicit val spark: SparkSession) {
 
@@ -99,12 +104,35 @@ final class ServingStore(val root: String)(implicit val spark: SparkSession) {
     * file, a new partition directory), so equal tokens mean equal contents.
     * `None` when the table does not exist.
     */
-  def version(name: String): Option[ServingStore.Version] = {
+  def version(name: String): Option[ServingStore.Version] =
+    dataFiles(name).map { case (pointer, dir, files) =>
+      ServingStore.Version(pointer,
+        files.map { case (f, a) => dir.relativize(f).toString -> a.size }.sorted)
+    }
+
+  /** Whether `name` holds data files that no snapshot swap wrote: files
+    * appended into its current snapshot after the swap that made it current
+    * (modified later than the `_current` pointer, at the file system's
+    * timestamp resolution), or any data file of a table in plain layout.
+    * False for an absent table.
+    */
+  def holdsAppends(name: String): Boolean = dataFiles(name).exists {
+    case (None, _, files) => files.nonEmpty
+    case (Some(_), _, files) =>
+      val swapped = Files.getLastModifiedTime(tableDir(name).resolve("_current"))
+      files.exists(_._2.lastModifiedTime.compareTo(swapped) > 0)
+  }
+
+  /** `name`'s `_current` pointer, its data directory and every data file
+    * Spark would list under it; `None` when the data directory is absent.
+    */
+  private def dataFiles(name: String)
+      : Option[(Option[String], Path, Vector[(Path, BasicFileAttributes)])] = {
     val pointer = currentPointer(tableDir(name))
     val dir = pointer.fold(tableDir(name))(tableDir(name).resolve)
     if (!Files.isDirectory(dir)) None
     else {
-      val files = Vector.newBuilder[(String, Long)]
+      val files = Vector.newBuilder[(Path, BasicFileAttributes)]
       // hidden subtrees are skipped, not walked: in-flight `_temporary`
       // task output appears and vanishes while a sink commits
       Files.walkFileTree(dir, new SimpleFileVisitor[Path] {
@@ -114,12 +142,53 @@ final class ServingStore(val root: String)(implicit val spark: SparkSession) {
           else FileVisitResult.SKIP_SUBTREE
         override def visitFile(f: Path,
             a: BasicFileAttributes): FileVisitResult = {
-          if (visible(f)) files += dir.relativize(f).toString -> a.size
+          if (visible(f)) files += f -> a
           FileVisitResult.CONTINUE
         }
       })
-      Some(ServingStore.Version(pointer, files.result().sorted))
+      Some((pointer, dir, files.result()))
     }
+  }
+
+  /** Payload of side file `file` of table `name` if it was written for
+    * `current` (the table's [[version]] as the caller just read it) and
+    * reads back intact; `None` when it is absent, was written for another
+    * version, or is truncated or corrupt.
+    *
+    * A side file is a small driver-side file kept in the table directory
+    * under a hidden name, outside any snapshot: Spark's listing, [[exists]]
+    * and [[version]] do not see it. A snapshot swap's GC deletes it (the
+    * swap changes the version anyway).
+    */
+  def sideFile(name: String, file: String,
+      current: ServingStore.Version): Option[Array[Byte]] = {
+    val f = tableDir(name).resolve("." + file)
+    if (!Files.isRegularFile(f)) return None
+    val bytes = Files.readAllBytes(f)
+    val d = ServingStore.DigestBytes
+    if (bytes.length < 2 * d) return None
+    val body = java.util.Arrays.copyOfRange(bytes, 0, bytes.length - d)
+    val sealedOk = java.util.Arrays.equals(ServingStore.sha256(body),
+      java.util.Arrays.copyOfRange(bytes, bytes.length - d, bytes.length))
+    val forCurrent = java.util.Arrays.equals(current.digest,
+      java.util.Arrays.copyOfRange(body, 0, d))
+    if (sealedOk && forCurrent) Some(java.util.Arrays.copyOfRange(body, d, body.length))
+    else None
+  }
+
+  /** Write side file `file` of table `name`, tagged with the version it
+    * describes: the driver writes a temporary file and renames it into
+    * place atomically (no Spark job). Layout: version digest, payload,
+    * SHA-256 of both.
+    */
+  def writeSideFile(name: String, file: String, version: ServingStore.Version,
+      payload: Array[Byte]): Unit = {
+    val dir = tableDir(name)
+    Files.createDirectories(dir)
+    val body = version.digest ++ payload
+    val tmp = dir.resolve(s".$file.tmp")
+    Files.write(tmp, body ++ ServingStore.sha256(body))
+    Files.move(tmp, dir.resolve("." + file), StandardCopyOption.ATOMIC_MOVE)
   }
 
   /** The names Spark's file listing keeps: hidden (`.x`) and metadata
@@ -293,5 +362,15 @@ final class ServingStore(val root: String)(implicit val spark: SparkSession) {
 object ServingStore {
 
   /** [[ServingStore.version]]'s token: equal tokens, equal table contents. */
-  final case class Version(pointer: Option[String], files: Vector[(String, Long)])
+  final case class Version(pointer: Option[String], files: Vector[(String, Long)]) {
+    /** SHA-256 of the token, as side files record it. */
+    def digest: Array[Byte] = sha256((pointer.getOrElse("") +: files.map {
+      case (f, size) => s"$f\t$size"
+    }).mkString("\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
+  }
+
+  private val DigestBytes = 32
+
+  private def sha256(b: Array[Byte]): Array[Byte] =
+    java.security.MessageDigest.getInstance("SHA-256").digest(b)
 }

@@ -8,12 +8,13 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
 import graft.SparkSpec
 import graft.api.Api
+import graft.batch.{OhlcvBatchJob, OhlcvBatchJobSpec}
 import graft.ingest.FixtureGen
 import graft.schema.Schemas.Tables
 import graft.stream.OhlcvStreamJob
 
-/** The janitor over the store the stream job actually writes: compaction
-  * changes files, never what the routes serve, and leaves the
+/** The janitor over the store the stream and batch jobs actually write:
+  * compaction changes files, never what the routes serve, and leaves the
   * overwrite-fed latest table alone.
   */
 class JanitorTopologySpec extends SparkSpec {
@@ -65,5 +66,53 @@ class JanitorTopologySpec extends SparkSpec {
     assert(store.version(Tables.Latest) == latestVersion,
       "the janitor rewrote the overwrite-fed latest table")
     assert(served() == before)
+  }
+
+  test("janitor compacts history: same served rows, fewer files, one index rebuild") {
+    implicit val s = spark
+    val hour = 3600000L
+    val syms = Seq("BTC_USDT", "ETH_USDT")
+    val series = syms.map(sym => sym -> FixtureGen.candles(sym, t0, hour, 60)).toMap
+    def tmp(p: String) = Files.createTempDirectory(p).toString
+    val store = new ServingStore(tmp("janitor-hist"))
+    val base = tmp("janitor-hist-raw")
+    syms.foreach(sym => FixtureGen.writeCsv(base, s"${sym}_1h.csv", series(sym).take(50)))
+    OhlcvBatchJob.run(spark, Seq(base), store)
+    def hourly(k: Int): OhlcvBatchJobSpec.Trace = {
+      val dir = tmp(s"janitor-hist-upd-$k")
+      syms.foreach(sym => FixtureGen.writeCsv(dir,
+        FixtureGen.updateFileName(sym, "1h", series(sym)(k).timestamp), Seq(series(sym)(k))))
+      val (n, trace) = OhlcvBatchJobSpec.traced(spark)(
+        OhlcvBatchJob.runIncremental(spark, Seq(dir), store))
+      assert(n == syms.size)
+      trace
+    }
+    (50 until 54).foreach(hourly)
+
+    val api = new Api(store)
+    val now = Instant.ofEpochMilli(t0 + 60 * hour)
+    def served() = syms.map(sym => (api.historicalData(sym, "1h", "all", now).collect().toSeq,
+      api.lastCloses(sym, "1h", 30).toSeq))
+    def files() = store.version(Tables.Historical).get.files.size
+    val (before, filesBefore) = (served(), files())
+
+    JanitorMain.run(store, now)
+
+    assert(files() < filesBefore, s"history still holds ${files()} files")
+    assert(served() == before)
+    val compacted = store.version(Tables.Historical)
+    JanitorMain.run(store, now)
+    assert(store.version(Tables.Historical) == compacted,
+      "the janitor rewrote history no batch appended to")
+    assert(hourly(54).rebuildJobs > 0, "the index survived the compaction")
+    assert(hourly(55).rebuildJobs == 0, "the index was rebuilt twice")
+    val truthDir = tmp("janitor-hist-truth")
+    syms.foreach(sym => FixtureGen.writeCsv(truthDir, s"${sym}_1h.csv", series(sym).take(56)))
+    val truth = new ServingStore(tmp("janitor-hist-truth-store"))
+    OhlcvBatchJob.run(spark, Seq(truthDir), truth)
+    def rows(st: ServingStore) = st.table(Tables.Historical).collect()
+      .map(r => (r.getAs[String]("doc_id"), r.getAs[Double]("sma_7"),
+        r.getAs[Double]("sma_30"))).sortBy(_._1).toSeq
+    assert(rows(store) == rows(truth), "incremental diverged from full recompute")
   }
 }

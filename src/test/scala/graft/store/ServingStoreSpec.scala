@@ -2,6 +2,8 @@ package graft.store
 
 import java.nio.file.{Files, Paths}
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
@@ -32,11 +34,18 @@ class ServingStoreSpec extends SparkSpec {
     implicit val s = spark
     import spark.implicits._
     val store = new ServingStore(tmp("ow-store"))
+    val dir = Paths.get(store.root, "t")
+    def pointer() = Files.readString(dir.resolve("_current")).trim
     store.overwrite("t", Seq((1, "x")).toDF("id", "v"))
     store.overwrite("t", Seq((2, "y"), (3, "z")).toDF("id", "v"))
+    val previous = pointer()
+    store.overwrite("t", Seq((4, "w"), (5, "u")).toDF("id", "v"))
     assert(store.table("t").count() == 2)
-    assert(!Files.exists(Paths.get(store.root, "t.staging")))
-    assert(!Files.exists(Paths.get(store.root, "t.retired")))
+    // orphan-snapshot GC with one swap of grace: the first snapshot is gone
+    val entries = Files.list(dir)
+    try assert(entries.iterator().asScala.map(_.getFileName.toString).toSet ==
+      Set("_current", pointer(), previous))
+    finally entries.close()
   }
 
   test("append-log sink tolerates replays; compact restores exactly-once") {
