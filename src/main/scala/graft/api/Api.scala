@@ -8,37 +8,42 @@ import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.schema.Schemas
 import graft.store.ServingStore
 
 /** Serving layer: the reference's six Flask endpoints (app.py / SURVEY.md
-  * §2.5) reproduced as pure DataFrame query functions over the
-  * ServingStore. ES-DSL semantics → Spark SQL:
+  * §2.5) reproduced as reads over the ServingStore. ES-DSL semantics:
   *
   *   term query        → equality filter
   *   bool/must         → conjunctive filter
   *   range             → between filter
-  *   sort + size       → orderBy + limit (TakeOrderedAndProject — top-k
-  *                        without a global sort, safe at any scale)
-  *   terms agg         → distinct/groupBy + limit
-  *   get by _id        → key-equality filter
+  *   sort + size       → ascending slice + limit
+  *   terms agg         → distinct list + limit
+  *   get by _id        → key lookup
+  *
+  * Every read returns rows straight from a driver-side view: `Option[Row]`
+  * (latest candle, latest stats), `Seq[Row]` (chart window, history range)
+  * or `Seq[String]` (the dropdowns). [[HttpApi]] renders from these, so a
+  * warm request builds, plans and collects no Spark query. Each `DataFrame`
+  * method (`latestCandle`, `chartData1m`, `historicalPairs`, ...) is a
+  * one-line adapter that wraps its row read's rows in a local frame, for
+  * callers that want a frame (`Pipeline`, the specs).
   *
   * The dashboard routes (latest candle, stats window, 1m chart and the two
   * dropdowns) read small tables that the stream rewrites every 15–60 s
-  * while dashboards poll every 5 s. They are served from driver-side
-  * views: one immutable view per table, rebuilt with a single Spark read
-  * only when the table's [[ServingStore.version]] token (the `_current`
-  * pointer plus the names and sizes of its visible data files) changes.
-  * A request lists the table directory and cuts a local frame from the
-  * view; collecting it runs no Spark job. Memory is bounded by what the
+  * while dashboards poll every 5 s. Each table has one immutable view,
+  * rebuilt with a single Spark read only when the table's
+  * [[ServingStore.version]] token (the `_current` pointer plus the names and
+  * sizes of its visible data files) changes; a request lists the table
+  * directory and cuts its rows from the view. Memory is bounded by what the
   * routes can return: one latest row and one stats window per symbol, the
   * chart rows of the day partitions the chart window touches, and the
   * distinct dropdown entries.
   *
-  * The history routes (`historicalData`, `lastCloses`/`predict`,
+  * The history routes (`historicalRows`, `lastCloses`/`predict`,
   * `latestStoredTimestamp`) read a per-pair view of the history table,
   * which only the batch job writes. Per version the table is resolved and
   * its (symbol, timeframe) pairs listed once (the listing is also the
@@ -49,6 +54,7 @@ import graft.store.ServingStore
   * drops them all, and a pair the table does not hold reads empty without
   * a Spark read and is not kept.
   *
+  * A read of an absent table throws ServingStore's `IllegalArgumentException`.
   * Time-dependent queries take `now` explicitly (injected Clock —
   * SURVEY.md §7.5.4) so golden tests are deterministic.
   */
@@ -59,28 +65,26 @@ final class Api(val store: ServingStore) {
 
   private def local(schema: StructType, rows: Seq[Row]): DataFrame =
     spark.createDataFrame(rows.asJava, schema)
-  private def local(v: Keyed, key: String): DataFrame = local(v.schema, v.rows(key))
-  private def local(v: Listing, limit: Int): DataFrame = local(v.schema, v.rows.take(limit))
+  private def local(c: Cut): DataFrame = local(c.schema, c.rows)
 
   private val latest = new View[Option[ServingStore.Version], LatestView](_ => {
     val t = store.table(Schemas.Tables.Latest)
     val rows = t.collect().toVector
     val (id, sym) = (t.schema.fieldIndex("doc_id"), t.schema.fieldIndex("symbol"))
     val symbols = rows.map(r => Option(r.getString(sym))).distinct
-      .sorted(Ordering.Option(BinaryString)).map(s => Row(s.orNull))
-    LatestView(
-      Keyed(t.schema, rows.groupBy(_.getString(id))),
-      Listing(StructType(Seq(t.schema("symbol"))), symbols))
+      .sorted(Ordering.Option(BinaryString)).map(_.orNull)
+    LatestView(ByKey(t.schema, rows.groupMapReduce(_.getString(id))(identity)((a, _) => a)),
+      symbols)
   })
 
-  private val stats = new View[Option[ServingStore.Version], Keyed](_ => {
+  private val stats = new View[Option[ServingStore.Version], ByKey](_ => {
     val cur = store.tableCurrent(Schemas.Tables.Stats, "doc_id") // log or merged sink
     val newest = cur
       .withColumn("_rn", row_number().over(
         Window.partitionBy("symbol").orderBy(desc("window_end"))))
       .filter(col("_rn") === 1).drop("_rn")
       .collect()
-    Keyed(cur.schema, newest.toVector.groupBy(_.getAs[String]("symbol")))
+    ByKey(cur.schema, newest.map(r => r.getAs[String]("symbol") -> r).toMap)
   })
 
   private val chart = new View[(Option[ServingStore.Version], Seq[String]), Keyed]({
@@ -97,6 +101,8 @@ final class Api(val store: ServingStore) {
   private val history = new View[Option[ServingStore.Version], History](_ =>
     new History(store.table(Schemas.Tables.Historical)))
 
+  private def latestView: LatestView = latest.get(store.version(Schemas.Tables.Latest))
+  private def statsView: ByKey = stats.get(store.version(Schemas.Tables.Stats))
   private def historyView: History =
     history.get(store.version(Schemas.Tables.Historical))
 
@@ -106,14 +112,14 @@ final class Api(val store: ServingStore) {
   /** `/api/realtime_stats/<sym>` part 1: get-by-id on the latest table
     * (app.py:97 / W8). Key = symbol with '/' (e.g. "BTC/USDT").
     */
-  def latestCandle(symbol: String): DataFrame =
-    local(latest.get(store.version(Schemas.Tables.Latest)).byId, symbol)
+  def latestCandleRow(symbol: String): Option[Row] = latestView.byId.rows.get(symbol)
+  def latestCandle(symbol: String): DataFrame = local(latestView.byId.cut(symbol))
 
   /** `/api/realtime_stats/<sym>` part 2: most recent stats window —
     * term symbol + sort window_end desc + size 1 (app.py:102-104 / W5).
     */
-  def latestStats(symbol: String): DataFrame =
-    local(stats.get(store.version(Schemas.Tables.Stats)), symbol)
+  def latestStatsRow(symbol: String): Option[Row] = statsView.rows.get(symbol)
+  def latestStats(symbol: String): DataFrame = local(statsView.cut(symbol))
 
   /** `/api/chart_data_1m/<sym>`: term symbol AND range @timestamp within
     * [now-35min, now], sort asc, size 200 (app.py:109-131 / Q2, W7). The
@@ -121,8 +127,13 @@ final class Api(val store: ServingStore) {
     * `dt` day partitions the window touches, by the session-time-zone
     * dates the sink partitions by.
     */
+  def chartRows(symbol: String, now: Instant, windowMinutes: Long = 35,
+      size: Int = 200): Seq[Row] = chartCut(symbol, now, windowMinutes, size).rows
   def chartData1m(symbol: String, now: Instant, windowMinutes: Long = 35,
-      size: Int = 200): DataFrame = {
+      size: Int = 200): DataFrame = local(chartCut(symbol, now, windowMinutes, size))
+
+  private def chartCut(symbol: String, now: Instant, windowMinutes: Long,
+      size: Int): Cut = {
     val from = now.minusSeconds(windowMinutes * 60)
     val zone = DateTimeUtils.getZoneId(spark.conf.get("spark.sql.session.timeZone"))
     val days = Iterator.iterate(LocalDate.ofInstant(from, zone))(_.plusDays(1))
@@ -130,7 +141,7 @@ final class Api(val store: ServingStore) {
     val v = chart.get((store.version(Schemas.Tables.ChartData), days))
     val (lo, hi) = (micros(from), micros(now))
     val ts = v.schema.fieldIndex("@timestamp")
-    local(v.schema, v.rows(symbol).filter { r =>
+    Cut(v.schema, v.rows(symbol).filter { r =>
       val t = DateTimeUtils.anyToMicros(r.get(ts))
       t >= lo && t <= hi
     }.take(size))
@@ -141,8 +152,15 @@ final class Api(val store: ServingStore) {
     * (app.py:153-189 / Q3). Range map per app.py:161-165; an unknown range
     * reads like "all".
     */
+  def historicalRows(symbol: String, timeframe: String, range: String,
+      now: Instant, size: Int = 10000): Seq[Row] =
+    historyCut(symbol, timeframe, range, now, size).rows
   def historicalData(symbol: String, timeframe: String, range: String,
-      now: Instant, size: Int = 10000): DataFrame = {
+      now: Instant, size: Int = 10000): DataFrame =
+    local(historyCut(symbol, timeframe, range, now, size))
+
+  private def historyCut(symbol: String, timeframe: String, range: String,
+      now: Instant, size: Int): Cut = {
     val days: Option[Int] = range match {
       case "1m" => Some(30)
       case "3m" => Some(90)
@@ -154,7 +172,7 @@ final class Api(val store: ServingStore) {
     val from = days.fold(0)(d =>
       p.lowerBound(now.minusSeconds(d.toLong * 86400).getEpochSecond))
     val until = if (size >= p.rows.length - from) p.rows.length else from + size
-    local(p.schema, p.rows.slice(from, until).toSeq)
+    Cut(p.schema, p.rows.slice(from, until).toSeq)
   }
 
   /** Historical endpoint result shaping (app.py:171-188): UTC label +
@@ -166,14 +184,16 @@ final class Api(val store: ServingStore) {
       col("close"), col("sma_7"), col("sma_30"))
 
   /** `/` dropdown: distinct symbols, sorted, cap 500 (app.py:57 / A4). */
+  def symbolList(limit: Int = 500): Seq[String] = latestView.symbols.take(limit)
   def realtimeSymbols(limit: Int = 500): DataFrame =
-    local(latest.get(store.version(Schemas.Tables.Latest)).symbols, limit)
+    local(SymbolSchema, symbolList(limit).map(Row(_)))
 
   /** `/historical` dropdown: distinct (symbol, timeframe) pairs formatted
     * `{symbol}_{timeframe}`, cap 1000 (app.py:72 / A5).
     */
+  def pairList(limit: Int = 1000): Seq[String] = historyView.pairs.take(limit)
   def historicalPairs(limit: Int = 1000): DataFrame =
-    local(historyView.pairs, limit)
+    local(PairSchema, pairList(limit).map(Row(_)))
 
   /** Model input for `/api/predict_xgboost/<sym_tf>`: last `n` closes,
     * newest-first then reversed to chronological on the driver
@@ -250,12 +270,10 @@ object Api {
     * does not hold reads empty without a Spark read and is not kept.
     */
   private final class History(t: DataFrame) {
-    private val listed = t.select("symbol", "timeframe").distinct()
+    private val rows = t.select("symbol", "timeframe").distinct()
       .withColumn("pair", concat(col("symbol"), lit("_"), col("timeframe")))
-      .orderBy("pair")
-    private val rows = listed.collect()
-    val pairs = Listing(StructType(Seq(listed.schema("pair"))),
-      rows.toVector.map(r => Row(r.get(2))))
+      .orderBy("pair").collect()
+    val pairs: Vector[String] = rows.toVector.map(_.getString(2))
     private val present = rows.map(r => (r.getString(0), r.getString(1))).toSet
     private val built = new java.util.concurrent.ConcurrentHashMap[(String, String), Pair]()
 
@@ -296,13 +314,25 @@ object Api {
     }
   }
 
+  /** A read's rows with the schema of the view they were cut from. */
+  private final case class Cut(schema: StructType, rows: Seq[Row])
+
+  /** A table's rows by a column that is unique in it. */
+  private final case class ByKey(schema: StructType, rows: Map[String, Row]) {
+    def cut(key: String): Cut = Cut(schema, rows.get(key).toSeq)
+  }
   /** A table's rows grouped by a key column. */
   private final case class Keyed(schema: StructType, byKey: Map[String, Vector[Row]]) {
     def rows(key: String): Vector[Row] = byKey.getOrElse(key, Vector.empty)
   }
-  /** A sorted list, cut to the caller's limit per read. */
-  private final case class Listing(schema: StructType, rows: Vector[Row])
-  private final case class LatestView(byId: Keyed, symbols: Listing)
+  /** The latest table by `doc_id` (the first row of a repeated id), and its
+    * sorted distinct symbols.
+    */
+  private final case class LatestView(byId: ByKey, symbols: Vector[String])
+
+  /** The dropdown frames' schemas: one nullable string column. */
+  private val SymbolSchema = StructType(Seq(StructField("symbol", StringType)))
+  private val PairSchema = StructType(Seq(StructField("pair", StringType)))
 
   /** Spark's string order: binary UTF-8. */
   private val BinaryString: Ordering[String] =

@@ -31,11 +31,15 @@ import graft.ml.{Forecaster, GbtLagModel}
   * ETH=24 (app.py:203-206); model/scaler pairs load from `modelsDir` and
   * missing artifacts are 404s (app.py:211-213).
   *
-  * Every route answers from [[Api]]'s driver-side views, which run a Spark
-  * read only on the first request after a table changes (for the
-  * historical and predict routes: the first request of a pair). The HTTP
-  * layer is a thin shell. `now` is injected for deterministic
-  * tests (SURVEY.md §7.5.4).
+  * Every route renders from [[Api]]'s row reads (`Option[Row]`, `Seq[Row]`,
+  * `Seq[String]`), which cut rows from driver-side views: a warm request
+  * builds, plans and collects no Spark query, and a view runs a Spark read
+  * only on the first request after its table changes (for the historical
+  * and predict routes: the first request of a pair). An absent table
+  * answers as the reference's missing index does (empty objects and
+  * lists); any other failure, such as a corrupt file, is a 500 after one
+  * retry when a snapshot's files vanished mid-read. `now` is injected for
+  * deterministic tests (SURVEY.md §7.5.4).
   *
   * [[start]] turns on TCP_NODELAY for the JDK server
   * (`sun.net.httpserver.nodelay=true`) unless that property is already
@@ -67,16 +71,13 @@ final class HttpApi(api: Api, modelsDir: Option[String] = None,
       val symbol = path.stripPrefix("/api/realtime_stats/").replace('-', '/')
       // absent tables → empty {} objects, like the reference's NotFound
       // handling (app.py:96-106)
-      val latest = scala.util.Try(api.latestCandle(symbol).collect())
-        .toOption.flatMap(_.headOption)
-      val stats = scala.util.Try(api.latestStats(symbol).collect())
-        .toOption.flatMap(_.headOption)
-      Right(Responses.realtimeStats(latest, stats))
+      Right(Responses.realtimeStats(
+        orEmptyIfAbsent(api.latestCandleRow(symbol), None),
+        orEmptyIfAbsent(api.latestStatsRow(symbol), None)))
     })
     server.createContext("/api/chart_data_1m/", exchange { path =>
       val symbol = path.stripPrefix("/api/chart_data_1m/").replace('-', '/')
-      Right(Responses.chartData1m(
-        api.chartData1m(symbol, now()).collect().toSeq))
+      Right(Responses.chartData1m(api.chartRows(symbol, now())))
     })
     server.createContext("/api/historical_data/", exchange { (path, query) =>
       val symTf = path.stripPrefix("/api/historical_data/")
@@ -84,9 +85,8 @@ final class HttpApi(api: Api, modelsDir: Option[String] = None,
         case None => Left(400 -> """{"error": "Invalid symbol_timeframe format."}""")
         case Some((symbol, timeframe)) =>
           val range = query.getOrElse("range", "all")
-          val rows = api.historicalData(symbol, timeframe, range, now())
-            .collect().toSeq
-          Right(Responses.historicalData(symbol, timeframe, rows))
+          Right(Responses.historicalData(symbol, timeframe,
+            api.historicalRows(symbol, timeframe, range, now())))
       }
     })
     server.createContext("/api/predict_xgboost/", exchange { path =>
@@ -98,12 +98,10 @@ final class HttpApi(api: Api, modelsDir: Option[String] = None,
     // (and get the FileNotFound retry in the exchange plumbing), not hide
     // an outage behind an empty dropdown.
     server.createContext("/api/symbols", exchange { path =>
-      Right(Responses.JArr(realtimeSymbols()
-        .map(Responses.JStr)).render)
+      Right(Responses.strings(realtimeSymbols()))
     })
     server.createContext("/api/historical_pairs", exchange { path =>
-      Right(Responses.JArr(historicalPairs()
-        .map(Responses.JStr)).render)
+      Right(Responses.strings(historicalPairs()))
     })
     // The two PAGE routes render the dashboards with the dropdown data
     // injected server-side per request — the reference's
@@ -130,23 +128,18 @@ final class HttpApi(api: Api, modelsDir: Option[String] = None,
 
   def stop(): Unit = if (server != null) server.stop(0)
 
-  private def realtimeSymbols(): IndexedSeq[String] =
-    collectOrEmptyIfAbsent(api.realtimeSymbols().collect())
-      .toIndexedSeq.map(_.getString(0))
+  private def realtimeSymbols(): Seq[String] = orEmptyIfAbsent(api.symbolList(), Nil)
 
-  private def historicalPairs(): IndexedSeq[String] =
-    collectOrEmptyIfAbsent(api.historicalPairs().collect())
-      .toIndexedSeq.map(_.getString(0))
+  private def historicalPairs(): Seq[String] = orEmptyIfAbsent(api.pairList(), Nil)
 
-  /** Empty only for ServingStore's table-absent error; anything else (a
+  /** `empty` only for ServingStore's table-absent error; anything else (a
     * corrupt file, a scan failure) propagates to the 500/retry plumbing.
     */
-  private def collectOrEmptyIfAbsent(
-      rows: => Array[org.apache.spark.sql.Row]): Array[org.apache.spark.sql.Row] =
-    try rows catch {
+  private def orEmptyIfAbsent[T](read: => T, empty: T): T =
+    try read catch {
       case e: IllegalArgumentException
           if String.valueOf(e.getMessage).contains("does not exist") =>
-        Array.empty
+        empty
     }
 
   private def notFound(path: String): Left[(Int, String), String] =
@@ -157,8 +150,7 @@ final class HttpApi(api: Api, modelsDir: Option[String] = None,
     * backslashes, and newlines that would otherwise break the body.
     */
   private def errJson(msg: String): String =
-    Responses.JObj(Seq("error" ->
-      Responses.JStr(Option(msg).getOrElse("(no message)")))).render
+    Responses.error(Option(msg).getOrElse("(no message)"))
 
   /** app.py:156-159: timeframe = last '_' part, symbol = the rest. */
   private def splitSymTf(s: String): Option[(String, String)] = {

@@ -3,17 +3,15 @@ package graft.api
 import java.nio.file.{Files, Paths}
 import java.time.Instant
 import java.util.concurrent.ConcurrentLinkedQueue
-import java.util.concurrent.atomic.{AtomicBoolean, AtomicLong}
+import java.util.concurrent.atomic.AtomicBoolean
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.graftbridge.ListenerDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions.{asc, col, desc, lit}
 
-import graft.SparkSpec
+import graft.{JobTrace, SparkSpec}
 import graft.batch.OhlcvBatchJob
 import graft.ingest.FixtureGen
 import graft.ml.Forecaster
@@ -101,21 +99,8 @@ class ApiViewSpec extends SparkSpec {
   private val persistence =
     Forecaster.Bundle(Forecaster.PersistenceModel(5), Forecaster.MinMaxScaler(0.0, 200.0))
 
-  /** Jobs started while `f` runs, counted by a listener of this spec. */
-  private def jobsDuring(f: => Unit): Long = {
-    val jobs = new AtomicLong
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit =
-        jobs.incrementAndGet(): Unit
-    }
-    ListenerDrain.drain(spark.sparkContext)
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      f
-      ListenerDrain.drain(spark.sparkContext)
-      jobs.get()
-    } finally spark.sparkContext.removeSparkListener(listener)
-  }
+  /** Jobs started while `f` runs. */
+  private def jobsDuring(f: => Unit): Long = JobTrace.of(spark)(f)._2.jobs.toLong
 
   test("each sink kind's write is visible on the next read") {
     val st = newStore()

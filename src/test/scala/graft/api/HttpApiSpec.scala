@@ -2,13 +2,15 @@ package graft.api
 
 import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 import java.time.Instant
 
 import graft.SparkSpec
 import graft.batch.OhlcvBatchJob
 import graft.ingest.FixtureGen
+import graft.schema.Schemas.Tables
 import graft.store.ServingStore
+import graft.stream.OhlcvStreamJob
 
 /** The six HTTP routes served end-to-end over a fixture store: responses
   * must be byte-identical to the Responses goldens and status codes must
@@ -141,5 +143,36 @@ class HttpApiSpec extends SparkSpec {
     val (code, body) = get("/api/realtime_stats/BTC-USDT")
     assert(code == 200)
     assert(body == """{"latest":{},"stats":{}}""")
+  }
+
+  test("realtime route: an unreadable table is a 500, only absent tables read empty") {
+    implicit val s = spark
+    import spark.implicits._
+    val st = new ServingStore(Files.createTempDirectory("http-corrupt").toString)
+    val h = new HttpApi(new Api(st), None, () => now)
+    val p = h.start()
+    try {
+      def realtime(): (Int, String) = {
+        val res = HttpClient.newHttpClient().send(HttpRequest.newBuilder(
+          URI.create(s"http://localhost:$p/api/realtime_stats/BTC-USDT")).build(),
+          HttpResponse.BodyHandlers.ofString())
+        (res.statusCode(), res.body())
+      }
+      assert(realtime() == (200, """{"latest":{},"stats":{}}"""))
+
+      st.overwrite(Tables.Latest, OhlcvStreamJob.latestAgg(
+        OhlcvStreamJob.parse(Seq(FixtureGen.streamJson("BTC/USDT", "1m",
+          FixtureGen.Candle(t0, 99.0, 101.0, 98.0, 100.0, 5.0))).toDF("value"))))
+      val (ok, body) = realtime()
+      assert(ok == 200 && body.contains("\"timestamp_ms\":" + t0), body)
+
+      val v = st.version(Tables.Latest).get
+      assert(v.files.nonEmpty)
+      v.files.foreach { case (f, _) => Files.write(
+        Paths.get(st.root, Tables.Latest, v.pointer.getOrElse(""), f), "not parquet".getBytes) }
+      val (code, err) = realtime()
+      assert(code == 500, err)
+      assert(err.startsWith("{\"error\":"), err)
+    } finally h.stop()
   }
 }

@@ -60,4 +60,25 @@ class ResponsesSpec extends AnyFunSuite {
       """[{"timestamp":1717203600000,"predicted_price":105.125},""" +
       """{"timestamp":1717207200000,"predicted_price":106}]""")
   }
+
+  test("number and string forms: whole numbers, NaN, infinities, escapes") {
+    val vs = Seq(0.0, -0.0, -3.0, 0.1, 999999999999999.0, 1e15, -1e15, 1.5e300,
+      4.9e-324, Double.NaN, Double.PositiveInfinity, Double.NegativeInfinity, 1.0 / 3,
+      123456789.125, 2e-7)
+    assert(Responses.predictions(vs.zipWithIndex.map { case (v, i) =>
+      Forecaster.Forecast(i.toLong, v) }) ==
+      """[{"timestamp":0,"predicted_price":0},{"timestamp":1,"predicted_price":0},""" +
+      """{"timestamp":2,"predicted_price":-3},{"timestamp":3,"predicted_price":0.1},""" +
+      """{"timestamp":4,"predicted_price":999999999999999},""" +
+      """{"timestamp":5,"predicted_price":1.0E15},{"timestamp":6,"predicted_price":-1.0E15},""" +
+      """{"timestamp":7,"predicted_price":1.5E300},{"timestamp":8,"predicted_price":4.9E-324},""" +
+      """{"timestamp":9,"predicted_price":NaN},{"timestamp":10,"predicted_price":Infinity},""" +
+      """{"timestamp":11,"predicted_price":-Infinity},""" +
+      """{"timestamp":12,"predicted_price":0.3333333333333333},""" +
+      """{"timestamp":13,"predicted_price":1.23456789125E8},""" +
+      """{"timestamp":14,"predicted_price":2.0E-7}]""")
+    val u = "\\" + "u00" // the JSON escape prefix, spelled so the compiler does not read it
+    assert(Responses.strings(Seq("A\"B\\C\n\r\t" + 1.toChar + 31.toChar + "\u00e9", "")) ==
+      "[\"A\\\"B\\\\C\\n\\r\\t" + u + "01" + u + "1f\u00e9\",\"\"]")
+  }
 }

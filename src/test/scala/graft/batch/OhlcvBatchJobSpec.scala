@@ -1,17 +1,12 @@
 package graft.batch
 
 import java.nio.file.{Files, Path, Paths}
-import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.graftbridge.ListenerDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
-  SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
+import graft.{JobTrace, SparkSpec}
 import graft.ingest.FixtureGen
 import graft.schema.Schemas
 import graft.store.ServingStore
@@ -333,10 +328,10 @@ class OhlcvBatchJobSpec extends SparkSpec {
     def rebuilt(from: Int, until: Int): Boolean = {
       val dir = updates(s"fault-upd-$from", "BTC_USDT" -> btc.slice(from, until),
         "ETH_USDT" -> eth.slice(from, until))
-      val (n, trace) = OhlcvBatchJobSpec.traced(spark)(
+      val (n, trace) = JobTrace.of(spark)(
         OhlcvBatchJob.runIncremental(spark, Seq(dir), store))
       assert(n == 2L * (until - from))
-      trace.rebuildJobs > 0
+      trace.jobsDescribed(HistoryTail.RebuildJobs) > 0
     }
 
     assert(rebuilt(50, 55), "the first hour after a full run found an index")
@@ -460,7 +455,7 @@ class OhlcvBatchJobSpec extends SparkSpec {
     // each store's history ends where the updates start, so the update
     // files are byte-identical whatever the history length; the first hour
     // builds the index, the second is traced
-    def hourly(rows: Int): (Long, OhlcvBatchJobSpec.Trace) = {
+    def hourly(rows: Int): (Long, JobTrace) = {
       val base = tmpDir(s"scale-raw-$rows")
       syms.foreach(sym => FixtureGen.writeCsv(base, s"${sym}_1h.csv",
         FixtureGen.candles(sym, tEnd - rows * hour, hour, rows)))
@@ -469,7 +464,7 @@ class OhlcvBatchJobSpec extends SparkSpec {
       def upd(at: Long) = updates(s"scale-upd-$rows-$at",
         syms.map(sym => sym -> FixtureGen.candles(sym, at, hour, 1)): _*)
       OhlcvBatchJob.runIncremental(spark, Seq(upd(tEnd)), store)
-      OhlcvBatchJobSpec.traced(spark)(
+      JobTrace.of(spark)(
         OhlcvBatchJob.runIncremental(spark, Seq(upd(tEnd + hour)), store))
     }
     val (n100, small) = hourly(100)
@@ -477,7 +472,8 @@ class OhlcvBatchJobSpec extends SparkSpec {
     info(s"100 rows per key: $small; 10 000 rows per key: $large")
     assert(n100 == 2 && n10k == 2)
     assert(small.jobs <= 8, s"an in-order run started ${small.jobs} jobs")
-    assert(small.rebuildJobs == 0 && large.rebuildJobs == 0)
+    assert(small.jobsDescribed(HistoryTail.RebuildJobs) == 0 &&
+      large.jobsDescribed(HistoryTail.RebuildJobs) == 0)
     assert(large.jobs == small.jobs, s"jobs grew with history: $small -> $large")
     assert(large.bytesRead == small.bytesRead,
       s"bytes read grew with history: $small -> $large")
@@ -485,33 +481,6 @@ class OhlcvBatchJobSpec extends SparkSpec {
 }
 
 object OhlcvBatchJobSpec {
-
-  /** What ran while a block ran: Spark jobs started, input bytes read by
-    * their tasks, and how many of the jobs rebuilt the [[HistoryTail]].
-    */
-  final case class Trace(jobs: Int, bytesRead: Long, rebuildJobs: Int)
-
-  def traced[T](spark: SparkSession)(f: => T): (T, Trace) = {
-    val (jobs, bytes, rebuilds) = (new AtomicInteger, new AtomicLong, new AtomicInteger)
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet()
-        if (Option(js.properties).exists(
-            _.getProperty("spark.job.description") == HistoryTail.RebuildJobs))
-          rebuilds.incrementAndGet(): Unit
-      }
-      override def onTaskEnd(te: SparkListenerTaskEnd): Unit =
-        Option(te.taskMetrics).foreach(m => bytes.addAndGet(m.inputMetrics.bytesRead))
-    }
-    val sc = spark.sparkContext
-    ListenerDrain.drain(sc)
-    sc.addSparkListener(listener)
-    try {
-      val r = f
-      ListenerDrain.drain(sc)
-      (r, Trace(jobs.get, bytes.get, rebuilds.get))
-    } finally sc.removeSparkListener(listener)
-  }
 
   /** The historical table's tail index file. */
   def indexFile(store: ServingStore): Path =

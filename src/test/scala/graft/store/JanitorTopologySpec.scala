@@ -6,9 +6,9 @@ import java.time.Instant
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
-import graft.SparkSpec
+import graft.{JobTrace, SparkSpec}
 import graft.api.Api
-import graft.batch.{OhlcvBatchJob, OhlcvBatchJobSpec}
+import graft.batch.{HistoryTail, OhlcvBatchJob}
 import graft.ingest.FixtureGen
 import graft.schema.Schemas.Tables
 import graft.stream.OhlcvStreamJob
@@ -78,11 +78,11 @@ class JanitorTopologySpec extends SparkSpec {
     val base = tmp("janitor-hist-raw")
     syms.foreach(sym => FixtureGen.writeCsv(base, s"${sym}_1h.csv", series(sym).take(50)))
     OhlcvBatchJob.run(spark, Seq(base), store)
-    def hourly(k: Int): OhlcvBatchJobSpec.Trace = {
+    def hourly(k: Int): JobTrace = {
       val dir = tmp(s"janitor-hist-upd-$k")
       syms.foreach(sym => FixtureGen.writeCsv(dir,
         FixtureGen.updateFileName(sym, "1h", series(sym)(k).timestamp), Seq(series(sym)(k))))
-      val (n, trace) = OhlcvBatchJobSpec.traced(spark)(
+      val (n, trace) = JobTrace.of(spark)(
         OhlcvBatchJob.runIncremental(spark, Seq(dir), store))
       assert(n == syms.size)
       trace
@@ -104,8 +104,8 @@ class JanitorTopologySpec extends SparkSpec {
     JanitorMain.run(store, now)
     assert(store.version(Tables.Historical) == compacted,
       "the janitor rewrote history no batch appended to")
-    assert(hourly(54).rebuildJobs > 0, "the index survived the compaction")
-    assert(hourly(55).rebuildJobs == 0, "the index was rebuilt twice")
+    assert(hourly(54).jobsDescribed(HistoryTail.RebuildJobs) > 0, "the index survived the compaction")
+    assert(hourly(55).jobsDescribed(HistoryTail.RebuildJobs) == 0, "the index was rebuilt twice")
     val truthDir = tmp("janitor-hist-truth")
     syms.foreach(sym => FixtureGen.writeCsv(truthDir, s"${sym}_1h.csv", series(sym).take(56)))
     val truth = new ServingStore(tmp("janitor-hist-truth-store"))
