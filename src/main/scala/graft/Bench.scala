@@ -19,52 +19,21 @@ import org.apache.spark.sql.SparkSession
   * sweep entirely.
   */
 object Bench {
-
-  /** Shuffle codec sized from the corpus ON DISK, not guessed: zstd
-    * halves shuffle write/spill where the volume is disk-scale (d7 at
-    * sf10: 30.8 → 14.7 GB write, SCALING.md r15) but costs CPU where
-    * it is not — the span-miner family (d7/d11–d13/x3) pays +10 s at
-    * sf1 under zstd (measured min-of-2 both codecs). 1 GB of parquet
-    * under sfDir is the measured crossover proxy (sf1 = 188 MB loses,
-    * sf10 = 2.0 GB wins); SPARK_GRAFT_SHUFFLE_CODEC overrides.
-    */
-  private[graft] def autoCodec(sfDir: String): String = {
-    def bytes(f: java.io.File): Long =
-      if (f.isFile) f.length()
-      else Option(f.listFiles()).map(_.map(bytes).sum).getOrElse(0L)
-    val b = bytes(new java.io.File(sfDir))
-    val codec = if (b >= (1L << 30)) "zstd" else "lz4"
-    graft.ext.Dedup.logRoute("benchCodec", codec, s"corpusBytes=$b")
-    codec
-  }
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val skipInvariants = sys.env.get("SPARK_GRAFT_SKIP_INVARIANTS")
       .exists(v => v == "1" || v.equalsIgnoreCase("true"))
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_out.json")
-    // shuffle partitions = cpus at gate scale; scale sweeps (sf10) pass
-    // SPARK_GRAFT_SHUFFLE so partitions stay within executor memory
-    // (the SCALING.md probes ran 1024 there — 256 was measured to OOM
-    // d3's verify stage at sf10: 4x the validated per-partition volume)
-    val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
     // min-of-2 is the gate-scale noise hygiene; a 100x completion sweep
     // sets SPARK_GRAFT_ONE_RUN=1 — doubling hour-scale queries buys no
     // signal there
     val oneRun = sys.env.get("SPARK_GRAFT_ONE_RUN")
       .exists(v => v == "1" || v.equalsIgnoreCase("true"))
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffle)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.io.compression.codec",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_CODEC", autoCodec(sfDir)))
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // shuffle partitions = cores at gate scale; scale sweeps (sf10) set
+    // SPARK_GRAFT_SHUFFLE so partitions stay within executor memory
+    // (the SCALING.md probes ran 1024 there — 256 was measured to OOM
+    // d3's verify stage at sf10: 4x the validated per-partition volume)
+    val spark = Sessions.getOrCreate("graft-bench", corpus = Some(sfDir))
     // Per-query executor task metrics (VERDICT r15 item 1): run/CPU/GC
     // time, peak execution memory, shuffle and spill bytes land in the
     // artifact next to each wall second, so a contaminated run (wall ≫

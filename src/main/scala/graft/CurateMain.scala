@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Runnable composed curation pipeline: gates → redact → exact dedup →
   * near-dup prune → decontaminate → pack, printing one JSON line of
   * per-stage (docs, tokens) metrics and optionally writing the packed
@@ -13,15 +11,7 @@ object CurateMain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val outDir = args.lift(1)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.getOrCreate("graft-curate", corpus = Some(sfDir))
     val t0 = System.nanoTime()
     val (packed, metrics) = graft.ext.CuratePipeline.curate(spark, sfDir)
     outDir.foreach(d => packed.write.mode("overwrite").parquet(d))

@@ -22,17 +22,7 @@ object Pipeline {
   def main(args: Array[String]): Unit = {
     val work = args.headOption.getOrElse(
       Files.createTempDirectory("graft-pipeline").toString)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .appName("graft-pipeline")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    implicit val s: SparkSession = spark
+    implicit val spark: SparkSession = Sessions.getOrCreate("graft-pipeline")
 
     // 1. ingest: paginated crawl (S9 contract — cursor pages of 1000,
     // bounded retries) against a deterministic in-memory exchange, then

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Print one SparkEntry query's result — for eyeballing an operator's
   * output (or an invariant's violation rows) without the Verify sweep.
   *
@@ -22,16 +20,7 @@ object ShowQ {
     }
     val sfDir = args.lift(1).getOrElse("/root/testdata/sf0.01")
     val maxRows = args.lift(2).map(_.toInt).getOrElse(50)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.getOrCreate("graft-showq", corpus = Some(sfDir))
     val df = SparkEntry.queries(name)(spark, sfDir)
     df.show(maxRows, truncate = false)
     println(s"[showq] $name rows=${df.count()}")

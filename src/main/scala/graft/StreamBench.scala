@@ -20,16 +20,8 @@ object StreamBench {
   def main(args: Array[String]): Unit = {
     val n = args.headOption.map(_.toInt).getOrElse(20000)
     val nSymbols = args.drop(1).headOption.map(_.toInt).getOrElse(4)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true") // the closing compaction benefits; streaming plans ignore AQE
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    implicit val s: SparkSession = spark
+    implicit val spark: SparkSession =
+      Sessions.getOrCreate("graft-streambench", logLevel = "ERROR")
     import spark.implicits._
 
     val t0 = 1717200000000L

@@ -16,15 +16,7 @@ object ServeMain {
     val port = args.lift(1).map(_.toInt).getOrElse(8050)
     val modelsDir = args.lift(2)
     val poolSize = args.lift(3).map(_.toInt).getOrElse(4)
-    implicit val spark: SparkSession = SparkSession.builder()
-      // spark-submit's --master arrives as the spark.master sysprop and
-      // wins; bare `sbt runMain` falls back to local
-      .master(sys.props.getOrElse("spark.master",
-        sys.env.getOrElse("SPARK_MASTER", "local[*]")))
-      .appName("graft-serving")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    implicit val spark: SparkSession = graft.Sessions.getOrCreate("graft-serving")
     val httpApi = new HttpApi(new Api(new ServingStore(storeRoot)), modelsDir,
       poolSize = poolSize)
     val bound = httpApi.start(port)

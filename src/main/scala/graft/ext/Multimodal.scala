@@ -27,6 +27,12 @@ import org.apache.spark.sql.functions._
   *  - on a real cluster, pass `-Djava.awt.headless=true` via
   *    `spark.executor.extraJavaOptions`; here we set it defensively before
   *    first ImageIO use (local mode shares one JVM).
+  *  - ImageIO's disk cache is OFF process-wide: first use of the codecs
+  *    calls `ImageIO.setUseCache(false)`, a JVM-global switch, so every
+  *    ImageIO caller in the driver or executor JVM — not only this
+  *    object — then buffers non-file streams in memory instead of in a
+  *    temp file per call. A caller that wants the disk cache (streams
+  *    larger than its heap) must turn it back on itself.
   *
   * Container format for "video": these fixtures use a minimal deterministic
   * container — magic "GFV1", big-endian int frame count, then per frame a
@@ -173,6 +179,7 @@ object Multimodal {
     // filesystem churn, not computing). The reused-reader paths below
     // use memory-cached streams explicitly; this flips the default for
     // the remaining fallback paths. Pure I/O plumbing — bytes unchanged.
+    // JVM-global: the process-wide policy stated in the object doc.
     ImageIO.setUseCache(false)
 
     /** Per-thread reused PNG reader/writer (r16, guide §1.2 step 2 /
@@ -542,9 +549,14 @@ object Multimodal {
     // getRGB → ColorModel (measured the dominant x17 decode-side
     // cost). Sums are exact integer totals of the same channel values,
     // so the hash is bit-identical (R16MediaSpec pins it against the
-    // getRGB loop); any other layout falls back to that loop.
+    // getRGB loop); any other layout falls back to that loop. Both loops
+    // read the buffer from index 0, so the raster must also be
+    // untranslated: a full-width getSubimage shares its parent's buffer
+    // at offset 0 and stride w, and only the translate says where it starts.
     val raster = img.getRaster
-    val intRgbFast = img.getType ==
+    val untranslated = raster.getSampleModelTranslateX == 0 &&
+      raster.getSampleModelTranslateY == 0
+    val intRgbFast = untranslated && img.getType ==
       java.awt.image.BufferedImage.TYPE_INT_RGB &&
       raster.getSampleModel.isInstanceOf[
         java.awt.image.SinglePixelPackedSampleModel] &&
@@ -552,7 +564,7 @@ object Multimodal {
         java.awt.image.SinglePixelPackedSampleModel]
         .getScanlineStride == w &&
       raster.getDataBuffer.getOffset == 0
-    val bgrFast = img.getType ==
+    val bgrFast = untranslated && img.getType ==
       java.awt.image.BufferedImage.TYPE_3BYTE_BGR && {
       val sm = raster.getSampleModel
       sm.isInstanceOf[java.awt.image.PixelInterleavedSampleModel] && {

@@ -625,34 +625,43 @@ object TextAnalysis {
     // and replaces are untouched — merges and the encoded corpus are
     // bit-identical (the v4/v5 oracles replay the same unrolled rounds).
     var corpus = base
+    var ckpt: DataFrame = null
     var prevCkpt: DataFrame = null
     val merges =
       scala.collection.mutable.ArrayBuffer[(Int, String, String, Long)]()
     var r = 1
     var drained = false
-    while (r <= rounds && !drained) {
-      val ckpt = corpus.localCheckpoint(false)
-      val top = ckpt
-        .select(split(expr("substring(s, 2, length(s) - 2)"), "\\|\\|")
-          .as("t"))
-        .filter(size(col("t")) >= 2)
-        .select(explode(expr(
-          "transform(sequence(0, size(t) - 2), " +
-            "i -> struct(t[i] AS w1, t[i + 1] AS w2))")).as("p"))
-        .groupBy(col("p.w1").as("w1"), col("p.w2").as("w2"))
-        .agg(count(lit(1)).as("n_pair"))
-        .orderBy(col("n_pair").desc, col("w1"), col("w2"))
-        .limit(1).collect()
-      if (prevCkpt != null) Dedup.unpersistCheckpoint(prevCkpt)
-      prevCkpt = ckpt
-      if (top.isEmpty) { drained = true; corpus = ckpt }
-      else {
-        val (w1, w2) = (top(0).getString(0), top(0).getString(1))
-        merges += ((r, w1, w2, top(0).getLong(2)))
-        corpus = ckpt.withColumn("s",
-          replace(col("s"), lit(s"|$w1||$w2|"), lit(s"|$w1+$w2|")))
-        r += 1
+    // a failing round (e.g. the '|' guard firing in the count job) must
+    // not leave its own or the previous round's checkpoint registered
+    try {
+      while (r <= rounds && !drained) {
+        ckpt = corpus.localCheckpoint(false)
+        val top = ckpt
+          .select(split(expr("substring(s, 2, length(s) - 2)"), "\\|\\|")
+            .as("t"))
+          .filter(size(col("t")) >= 2)
+          .select(explode(expr(
+            "transform(sequence(0, size(t) - 2), " +
+              "i -> struct(t[i] AS w1, t[i + 1] AS w2))")).as("p"))
+          .groupBy(col("p.w1").as("w1"), col("p.w2").as("w2"))
+          .agg(count(lit(1)).as("n_pair"))
+          .orderBy(col("n_pair").desc, col("w1"), col("w2"))
+          .limit(1).collect()
+        if (prevCkpt != null) Dedup.unpersistCheckpoint(prevCkpt)
+        prevCkpt = ckpt
+        if (top.isEmpty) { drained = true; corpus = ckpt }
+        else {
+          val (w1, w2) = (top(0).getString(0), top(0).getString(1))
+          merges += ((r, w1, w2, top(0).getLong(2)))
+          corpus = ckpt.withColumn("s",
+            replace(col("s"), lit(s"|$w1||$w2|"), lit(s"|$w1+$w2|")))
+          r += 1
+        }
       }
+    } catch { case t: Throwable =>
+      Seq(ckpt, prevCkpt).filter(_ != null).distinct
+        .foreach(Dedup.unpersistCheckpoint)
+      throw t
     }
     (merges.toSeq, corpus)
   }

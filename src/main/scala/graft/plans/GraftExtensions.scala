@@ -24,11 +24,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
   }
 
   override def apply(ext: SparkSessionExtensions): Unit = {
-    // grouped top-k: the row_number-idiom rewrite plus the strategy that
-    // plans the resulting node (the pair must ship together — a rewritten
-    // plan with no strategy would fail physical planning)
-    ext.injectOptimizerRule(_ => RowNumberTopKRule)
-    ext.injectPlannerStrategy(_ => new TopKPerGroupStrategy)
     ext.injectFunction((
       new FunctionIdentifier("fnv1a64"),
       new ExpressionInfo(classOf[Fnv1a64].getName, "fnv1a64"),

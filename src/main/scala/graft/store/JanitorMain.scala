@@ -38,14 +38,7 @@ object JanitorMain {
     require(args.nonEmpty,
       "usage: JanitorMain <storeDir> [keepHours=2]")
     val keepHours = if (args.length > 1) args(1).toLong else 2L
-    val spark = SparkSession.builder()
-      .master(sys.props.getOrElse("spark.master", "local[*]"))
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    implicit val s: SparkSession = spark
+    implicit val spark: SparkSession = graft.Sessions.getOrCreate("graft-janitor")
     run(new ServingStore(args(0)), Instant.now(), keepHours)
     println(s"[janitor] OK store=${args(0)}")
     spark.stop()

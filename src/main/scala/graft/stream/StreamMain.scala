@@ -17,20 +17,18 @@ import graft.store.ServingStore
   *
   * args: [storeRoot] [checkpointRoot]; broker/topic via GRAFT_KAFKA_BOOTSTRAP
   * / GRAFT_KAFKA_TOPIC env (defaults match the reference deployment).
+  *
+  * State partitions: q1 and q2 take the session's shuffle-partition count,
+  * which [[graft.Sessions]] sets to the core count (not Spark's 200 — 200
+  * state-store commits per micro-batch of a few dozen rows). A new
+  * checkpoint fixes the count at first start; restarting from an existing
+  * checkpoint keeps its old count whatever the session says.
   */
 object StreamMain {
   def main(args: Array[String]): Unit = {
     val storeRoot = args.lift(0).getOrElse("/tmp/graft-store")
     val checkpointRoot = args.lift(1).getOrElse(s"$storeRoot/_checkpoints")
-    implicit val spark: SparkSession = SparkSession.builder()
-      // spark-submit's --master arrives as the spark.master sysprop and
-      // wins; bare `sbt runMain` falls back to local
-      .master(sys.props.getOrElse("spark.master",
-        sys.env.getOrElse("SPARK_MASTER", "local[*]")))
-      .appName("graft-speed-layer")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    implicit val spark: SparkSession = graft.Sessions.getOrCreate("graft-speed-layer")
 
     val cfg = KafkaSource.Config(
       bootstrapServers = sys.env.getOrElse("GRAFT_KAFKA_BOOTSTRAP", "localhost:9092"),

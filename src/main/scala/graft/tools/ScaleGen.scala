@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scale-up corpus generator for slope measurements (VERDICT r5 item 6).
@@ -37,19 +36,11 @@ object ScaleGen {
     val outDir = args.headOption.getOrElse("/root/repo/scaledata/sf1")
     val scale = args.lift(1).map(_.toInt).getOrElse(10)
     val srcDir = args.lift(2).getOrElse("/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // events.ts has shipped as both parquet timestamp[ns] and
-      // timestamp[us]; with this conf the ns form reads as INT64 and the
-      // write-back re-emits whichever shape came in — the query layer's
-      // dtype-adaptive EventsTable.load consumes either.
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // events.ts has shipped as both parquet timestamp[ns] and
+    // timestamp[us]; the session reads the ns form as INT64 and the
+    // write-back re-emits whichever shape came in — the query layer's
+    // dtype-adaptive EventsTable.load consumes either.
+    val spark = graft.Sessions.getOrCreate("graft-scalegen", corpus = Some(srcDir))
     import spark.implicits._
 
     // ---- documents -------------------------------------------------------

@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 
 /** r15 stage-attribution probe: runs one SparkEntry query (warm, after
   * one untimed pass) and prints per-stage wall, task count, and summed
@@ -14,14 +13,8 @@ object StageProbe {
   def main(args: Array[String]): Unit = {
     val name = args(0)
     val sfDir = args.lift(1).getOrElse("/root/testdata/sf0.1")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Sessions.getOrCreate("graft-stageprobe",
+      corpus = Some(sfDir), logLevel = "ERROR")
     spark.range(1000000).selectExpr("sum(id)").collect()
     val fn = graft.SparkEntry.queries(name)
     // warm pass (codegen, footers)

@@ -31,6 +31,23 @@ class PhashSpec extends SparkSpec {
       "a uniform +20 brightness shift changed the hash")
   }
 
+  test("a full-width lower sub-image hashes its own rows, not its " +
+      "parent's (both fast raster layouts)") {
+    for (tpe <- Seq(BufferedImage.TYPE_INT_RGB, BufferedImage.TYPE_3BYTE_BGR)) {
+      // top half a horizontal gradient, bottom half a checkerboard
+      val parent = new BufferedImage(32, 32, tpe)
+      for (y <- 0 until 32; x <- 0 until 32) parent.setRGB(x, y,
+        if (y < 16) gray(x * 7)
+        else gray(if (((x / 4) + (y / 4)) % 2 == 0) 30 else 220))
+      // shares the parent's buffer at offset 0 and stride 32
+      val sub = parent.getSubimage(0, 16, 32, 16)
+      val copy = new BufferedImage(32, 16, tpe)
+      for (y <- 0 until 16; x <- 0 until 32) copy.setRGB(x, y, sub.getRGB(x, y))
+      assert(Multimodal.imagePhash64(sub) == Multimodal.imagePhash64(copy),
+        s"image type $tpe: sub-image hashed the parent's top rows")
+    }
+  }
+
   test("aHash separates structure: gradient vs checkerboard vs inverse") {
     def dist(a: Long, b: Long) = java.lang.Long.bitCount(a ^ b)
     val g = Multimodal.imagePhash64(img(32, 32)((x, _) => gray(x * 7)))

@@ -37,6 +37,24 @@ class Round12Spec extends SparkSpec {
       s"$leaked RDDs still pinned after mmrTopK: $names")
   }
 
+  test("bpeTrainMerges failing on the '|' guard leaves no round " +
+      "checkpoint registered") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("bpe-guard").toString
+    Seq((1L, "a b a b"), (2L, "a b|c a b"))
+      .toDF("doc_id", "text").write.parquet(s"$dir/documents.parquet")
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val e = intercept[Exception] {
+      TextAnalysis.bpeTrainMerges(spark, dir, rounds = 3)
+    }
+    val msgs = Iterator.iterate[Throwable](e)(_.getCause)
+      .takeWhile(_ != null).map(t => String.valueOf(t.getMessage)).toSeq
+    assert(msgs.exists(_.contains("containing the '|' delimiter")),
+      msgs.mkString("\n"))
+    val after = spark.sparkContext.getPersistentRDDs.keySet
+    assert(after == before, s"leaked RDDs: ${after -- before}")
+  }
+
   test("floorMicroGuarded: boundary-adjacent values SNAP to the boundary " +
       "on both sides (r13 — the raise_error guard would abort benign " +
       "100 TB jobs); exact and clear-of-boundary values floor normally") {

@@ -63,20 +63,6 @@ class GraftExtensionsSpec extends AnyFunSuite {
     assert(math.abs(agg.getDouble(0) - 500.0) <= 50, s"SQL median: $agg")
   }
 
-  test("SQL row_number<=k queries plan through the heap operator") {
-    spark.range(0, 1000).selectExpr("id % 7 AS g", "id", "id * 37 % 1000 AS v")
-      .createOrReplaceTempView("rnk_t")
-    val q = spark.sql(
-      """SELECT g, id, v FROM (
-           SELECT g, id, v, row_number() OVER (
-             PARTITION BY g ORDER BY v DESC, id) AS rn
-           FROM rnk_t) WHERE rn <= 3""")
-    assert(q.queryExecution.optimizedPlan.collectFirst {
-      case t: TopKPerGroupPlan => t }.isDefined,
-      s"SQL idiom not rewritten:\n${q.queryExecution.optimizedPlan}")
-    assert(q.count() == 21)
-  }
-
   test("kll_quantile rejects a NULL quantile literal with a clear error") {
     val e = intercept[Exception] {
       spark.sql("SELECT kll_quantile(v, CAST(NULL AS DOUBLE)) " +

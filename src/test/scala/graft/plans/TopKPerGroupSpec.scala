@@ -77,83 +77,6 @@ class TopKPerGroupSpec extends SparkSpec {
     } finally spark.conf.set("spark.sql.adaptive.enabled", prev)
   }
 
-  test("row_number <= k idiom is rewritten to the heap operator by the rule") {
-    val exp = spark.experimental
-    if (!exp.extraOptimizations.contains(RowNumberTopKRule))
-      exp.extraOptimizations = exp.extraOptimizations :+ RowNumberTopKRule
-    if (!exp.extraStrategies.exists(_.isInstanceOf[TopKPerGroupStrategy]))
-      exp.extraStrategies = exp.extraStrategies :+ new TopKPerGroupStrategy
-    val df = randomDf(3000, 11, seed = 23)
-    val w = Window.partitionBy("g").orderBy(col("v").desc, col("id"))
-    val q = df.withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= 5).drop("rn")
-    assert(q.queryExecution.optimizedPlan.collectFirst {
-      case t: TopKPerGroupPlan => t }.isDefined,
-      s"rule did not fire:\n${q.queryExecution.optimizedPlan}")
-    assert(q.queryExecution.sparkPlan.collect {
-      case e: TopKPerGroupExec => e }.size == 2)
-    // and the rewritten query returns exactly the direct operator's rows
-    val expect = TopKPerGroup.topK(df, Seq("g"), "v", 5,
-      desc = true, tiebreakCols = Seq("id"))
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    val got = q.collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    assert(got == expect)
-  }
-
-  test("rewrite honors the session opt-out conf") {
-    val exp = spark.experimental
-    if (!exp.extraOptimizations.contains(RowNumberTopKRule))
-      exp.extraOptimizations = exp.extraOptimizations :+ RowNumberTopKRule
-    val df = randomDf(500, 5, seed = 37)
-    val w = Window.partitionBy("g").orderBy(col("v").desc, col("id"))
-    def q = df.withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= 3).drop("rn")
-    spark.conf.set(RowNumberTopKRule.RewriteEnabledKey, "false")
-    try {
-      assert(q.queryExecution.optimizedPlan.collectFirst {
-        case t: TopKPerGroupPlan => t }.isEmpty,
-        "rewrite fired with spark.graft.topk.rewrite.enabled=false")
-    } finally spark.conf.unset(RowNumberTopKRule.RewriteEnabledKey)
-    assert(q.queryExecution.optimizedPlan.collectFirst {
-      case t: TopKPerGroupPlan => t }.isDefined,
-      "rewrite should fire again once the conf is unset")
-  }
-
-  test("rule stays off non-matching window patterns") {
-    val exp = spark.experimental
-    if (!exp.extraOptimizations.contains(RowNumberTopKRule))
-      exp.extraOptimizations = exp.extraOptimizations :+ RowNumberTopKRule
-    val df = randomDf(500, 5, seed = 31)
-    val w = Window.partitionBy("g").orderBy(col("v").desc, col("id"))
-    def hasTopK(q: org.apache.spark.sql.DataFrame) =
-      q.queryExecution.optimizedPlan.collectFirst {
-        case t: TopKPerGroupPlan => t }.isDefined
-    // rank consumed downstream → must keep WindowExec
-    val keepsRn = df.withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= 3)
-    assert(!hasTopK(keepsRn), "rewrote a query whose output includes rn")
-    // rank() is not row_number → not rewritten
-    val rankQ = df.withColumn("rk", rank().over(w))
-      .filter(col("rk") <= 3).drop("rk")
-    assert(!hasTopK(rankQ), "rewrote a rank() query")
-    // non-literal bound → not rewritten
-    val dynQ = df.withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= col("g")).drop("rn")
-    assert(!hasTopK(dynQ), "rewrote a non-literal rank bound")
-    // global top-n (empty PARTITION BY) → TakeOrderedAndProject territory,
-    // and ClusteredDistribution(Nil) would throw at physical planning
-    val globalW = Window.orderBy(col("v").desc, col("id"))
-    val globalQ = df.withColumn("rn", row_number().over(globalW))
-      .filter(col("rn") <= 3).drop("rn")
-    assert(!hasTopK(globalQ), "rewrote a global (partition-less) top-n")
-    assert(globalQ.count() == 3, "global top-n must still execute")
-    // huge k → heaps without spill lose to WindowExec's spilling sort
-    val hugeQ = df.withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= 100000).drop("rn")
-    assert(!hasTopK(hugeQ), "rewrote an unboundedly large k")
-  }
-
   test("spill path: tiny threshold flushes the partial map and spills the " +
       "final map to sorted runs, results stay exact") {
     val aqePrev = spark.conf.get("spark.sql.adaptive.enabled", "true")
